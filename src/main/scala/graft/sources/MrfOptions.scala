@@ -21,16 +21,16 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *   - `maxChunksPerBatch`: admission control — caps each micro-batch
   *     so a terabyte backlog streams as bounded batches instead of one
   *     giant first batch.
-  *   - `splitMode`: where the split pass runs. `driver` streams file
-  *     bytes through the driver (the reference's architecture,
-  *     `JsonMRFSource.scala:59-180` — driver NIC caps throughput at
-  *     fleet scale); `executors` runs one Spark task per file and ships
-  *     back only ~100-byte chunk SPECS, so split I/O scales with the
-  *     cluster; `auto` (default) picks `executors` once the input is
-  *     big enough to amortize a job (≥ 4 files or ≥ 256 MB) — except
-  *     that a SINGLE-file stream always stays on the driver's
-  *     incremental scan, which emits chunk-by-chunk instead of at
-  *     file completion.
+  *
+  * Where the split pass runs is chosen from the listed input, not set by
+  * the user. A small input streams its bytes through the driver (the
+  * reference's architecture, `JsonMRFSource.scala:59-180`). Once the
+  * input is big enough to amortize a job (≥ 4 files or ≥ 256 MB) the
+  * split runs on executors, one Spark task per file, and ships back only
+  * ~100-byte chunk SPECS, so split I/O scales with the cluster instead
+  * of the driver NIC. A SINGLE-file stream always stays on the driver's
+  * incremental scan, which emits chunk-by-chunk instead of at file
+  * completion.
   */
 final case class MrfOptions(
     paths: Seq[String],
@@ -41,7 +41,6 @@ final case class MrfOptions(
     perElement: Boolean,
     maxChunksPerBatch: Option[Int],
     ignoreCorruptFiles: Boolean,
-    splitMode: String,
     maxResidueBytes: Long) {
 
   def splitterOptions: JsonSplitter.Options =
@@ -92,12 +91,7 @@ object MrfOptions {
       // had NO way to raise it (and under ignoreCorruptFiles the
       // overflow silently dropped the file)
       maxResidueBytes =
-        math.max(1024, map.getLong("maxResidueBytes", 64L << 20)),
-      splitMode = Option(map.get("splitMode")).getOrElse("auto") match {
-        case m @ ("auto" | "driver" | "executors") => m
-        case other => throw new IllegalArgumentException(
-          s"payer-mrf: splitMode must be auto|driver|executors, got '$other'")
-      })
+        math.max(1024, map.getLong("maxResidueBytes", 64L << 20)))
   }
 
   def fromProperties(props: java.util.Map[String, String]): MrfOptions =

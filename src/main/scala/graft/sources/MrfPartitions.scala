@@ -168,6 +168,13 @@ object MrfSplitCache {
       path: String, len: Long, mtime: Long, chunkBytes: Long, maxElements: Int,
       ignoreCorrupt: Boolean)
 
+  // (len, mtime) come from the statuses the LISTING already fetched —
+  // no second sequential stat pass per file (an S3 HEAD storm at fleet
+  // scale)
+  private def keyOf(st: org.apache.hadoop.fs.FileStatus, opts: MrfOptions): Key =
+    Key(st.getPath.toString, st.getLen, st.getModificationTime, opts.chunkBytes,
+      opts.maxElements, opts.ignoreCorruptFiles)
+
   private val MaxFiles = 128
   private val cache =
     new java.util.LinkedHashMap[Key, Seq[MrfInputPartition]](16, 0.75f, true) {
@@ -176,65 +183,41 @@ object MrfSplitCache {
         size() > MaxFiles
     }
 
-  def getOrSplit(
-      file: Path,
-      opts: MrfOptions,
-      conf: org.apache.hadoop.conf.Configuration): Seq[MrfInputPartition] =
-    getOrSplitOne(file, opts, conf, distributed = false)
-
-  /** One file through the cache; on a miss the split runs either inline
-    * (driver) or as a one-task Spark job (`distributed`) — the
-    * streaming splitter uses the latter to pipeline per-file executor
-    * jobs. Cache hits also make checkpoint-restart re-derivation
-    * instant within a driver JVM.
+  /** One file through the cache; on a miss the split runs as a one-task
+    * Spark job in `jobGroup` — the streaming splitter uses this to
+    * pipeline per-file executor jobs. Cache hits also make
+    * checkpoint-restart re-derivation instant within a driver JVM.
     */
   def getOrSplitOne(
-      file: Path,
+      status: org.apache.hadoop.fs.FileStatus,
       opts: MrfOptions,
       conf: org.apache.hadoop.conf.Configuration,
-      distributed: Boolean,
-      jobGroup: Option[String] = None,
-      sc: Option[org.apache.spark.SparkContext] = None,
-      status: Option[org.apache.hadoop.fs.FileStatus] = None): Seq[MrfInputPartition] = {
-    val st = status.getOrElse(file.getFileSystem(conf).getFileStatus(file))
-    val key = Key(file.toString, st.getLen, st.getModificationTime,
-      opts.chunkBytes, opts.maxElements, opts.ignoreCorruptFiles)
+      sc: org.apache.spark.SparkContext,
+      jobGroup: String): Seq[MrfInputPartition] = {
+    val file = status.getPath
+    val key = keyOf(status, opts)
     cache.synchronized(Option(cache.get(key))) match {
       case Some(hit) => hit
       case None =>
-        val result =
-          if (distributed)
-            MrfFileSplitter.splitFilesDistributed(Seq(file), opts, conf,
-              sc.getOrElse(throw new IllegalArgumentException(
-                "distributed split requires the owning SparkContext")),
-              jobGroup.getOrElse(MrfFileSplitter.freshSplitJobGroup()))(file.toString)
-          else
-            MrfFileSplitter.splitFileGuarded(file.toString, opts,
-              new SerializableHadoopConf(conf))
+        val result = MrfFileSplitter.splitFilesDistributed(
+          Seq(file), opts, conf, sc, jobGroup)(file.toString)
         cache.synchronized(cache.put(key, result))
         result
     }
   }
 
   /** Split a fleet of files, serving cache hits and routing the misses
-    * to either the driver thread pool or an executor split job
-    * (per `opts.splitMode`). Results come back in `files` order with
-    * per-file ordinals — the caller assigns global ordinals.
+    * to an executor split job when they pass
+    * [[MrfFileSplitter.autoThreshold]] and to the driver thread pool
+    * otherwise. Results come back in `files` order with per-file
+    * ordinals — the caller assigns global ordinals.
     */
   def getOrSplitAll(
       statuses: Seq[org.apache.hadoop.fs.FileStatus],
       opts: MrfOptions,
       conf: org.apache.hadoop.conf.Configuration,
       sc: org.apache.spark.SparkContext): Seq[MrfInputPartition] = {
-    // (len, mtime) come from the statuses the LISTING already fetched —
-    // no second sequential stat pass per file (an S3 HEAD storm at
-    // fleet scale)
-    val keyed = statuses.map { st =>
-      val f = st.getPath
-      (f, st.getLen,
-        Key(f.toString, st.getLen, st.getModificationTime, opts.chunkBytes, opts.maxElements,
-          opts.ignoreCorruptFiles))
-    }
+    val keyed = statuses.map(st => (st.getPath, st.getLen, keyOf(st, opts)))
     val hits: Map[String, Seq[MrfInputPartition]] = keyed.flatMap { case (f, _, k) =>
       cache.synchronized(Option(cache.get(k))).map(f.toString -> _)
     }.toMap
@@ -242,13 +225,8 @@ object MrfSplitCache {
     val split: Map[String, Seq[MrfInputPartition]] =
       if (misses.isEmpty) Map.empty
       else {
-        val useExecutors = opts.splitMode match {
-          case "executors" => true
-          case "driver" => false
-          case _ => MrfFileSplitter.autoThreshold(misses.size, misses.map(_._2).sum)
-        }
         val out =
-          if (useExecutors)
+          if (MrfFileSplitter.autoThreshold(misses.size, misses.map(_._2).sum))
             MrfFileSplitter.splitFilesDistributed(misses.map(_._1), opts, conf, sc)
           else
             MrfFileSplitter.splitFilesDriverPool(misses.map(_._1), opts, conf)
@@ -290,15 +268,12 @@ object MrfFileSplitter extends org.apache.spark.internal.Logging {
     * chunk twice on re-reads of a directory. A sibling OLDER than the
     * compressed file is stale (archive re-uploaded): the compressed
     * file stays listed and [[Gunzip.decompressIfNeeded]] re-materializes.
-    */
-  def listFiles(opts: MrfOptions, conf: org.apache.hadoop.conf.Configuration): Seq[Path] =
-    listFileStatuses(opts, conf).map(_.getPath)
-
-  /** [[listFiles]] keeping the `FileStatus`es the listing already
-    * fetched — callers that need (len, mtime) for cache keys or
-    * mode-selection heuristics reuse these instead of issuing a second
-    * sequential stat per file (1000 files on object storage = 1000
-    * extra HEAD round-trips of pure startup latency).
+    *
+    * The `FileStatus`es the listing already fetched are returned as is:
+    * callers that need (len, mtime) for cache keys or split-path
+    * selection reuse these instead of issuing a second sequential stat
+    * per file (1000 files on object storage = 1000 extra HEAD
+    * round-trips of pure startup latency).
     */
   def listFileStatuses(
       opts: MrfOptions,
@@ -390,16 +365,11 @@ object MrfFileSplitter extends org.apache.spark.internal.Logging {
     }
   }
 
-  /** Split one file into partitions; `ordinalBase` gives the first chunk's
-    * global ordinal. gz inputs are eagerly decompressed to a sibling file
-    * first (gz cannot be seeked — reference behavior,
-    * `JsonMRFSourceProvider.scala:38-46`).
-    */
   /** One file through the splitter with the source's corrupt-file
     * policy applied. Takes the path as a String and the conf in its
     * serializable wrapper so the SAME function is the body of both the
     * driver pool and the executor split task — determinism between the
-    * two modes is by construction, not by parallel maintenance.
+    * two split paths is by construction, not by parallel maintenance.
     */
   def splitFileGuarded(
       file: String,
@@ -437,8 +407,8 @@ object MrfFileSplitter extends org.apache.spark.internal.Logging {
         // "contents already read are returned" contract as
         // spark.sql.files.ignoreCorruptFiles, and identical to the
         // incremental streaming splitter (which cannot retract
-        // already-emitted chunks), so driver and executor modes derive
-        // the same ledger deterministically for genuinely corrupt
+        // already-emitted chunks), so the driver and executor paths
+        // derive the same ledger deterministically for genuinely corrupt
         // bytes (same failure byte). Like Spark's flag, a TRANSIENT
         // I/O error is indistinguishable from corruption here — users
         // who cannot tolerate that ambiguity leave the flag off.
@@ -481,16 +451,17 @@ object MrfFileSplitter extends org.apache.spark.internal.Logging {
     } finally {
       // on failure, CANCEL the queue — plain shutdown() would let the
       // remaining files stream their full bytes through the driver for
-      // a plan that is already dead (the executor-mode counterpart
+      // a plan that is already dead (the executor-path counterpart
       // cancels via shutdownNow + cancelJobGroup); threads blocked in
       // reads see the interrupt at the next chunk callback
       if (failed) { pool.shutdownNow(); () } else pool.shutdown()
     }
   }
 
-  /** auto splitMode heuristic, shared by the batch planner and the
-    * streaming splitter so mode selection cannot drift: a split job
-    * pays off at ≥ 4 files or ≥ 256 MB of input.
+  /** Split-path selection rule, shared by the batch planner and the
+    * streaming splitter so the choice cannot drift: an executor split
+    * job pays off at ≥ 4 files or ≥ 256 MB of input; below that the
+    * driver splits.
     */
   def autoThreshold(count: Int, totalBytes: Long): Boolean =
     count >= 4 || totalBytes >= (256L << 20)
@@ -541,6 +512,11 @@ object MrfFileSplitter extends org.apache.spark.internal.Logging {
   def freshSplitJobGroup(): String =
     "payer-mrf-split-" + java.util.UUID.randomUUID().toString.take(8)
 
+  /** Split one file into partitions; `ordinalBase` gives the first chunk's
+    * global ordinal. gz inputs are eagerly decompressed to a sibling file
+    * first (gz cannot be seeked — reference behavior,
+    * `JsonMRFSourceProvider.scala:38-46`).
+    */
   def splitFile(
       file: Path,
       opts: MrfOptions,

@@ -155,8 +155,9 @@ final class MrfBatch(
       fileNames.forall(names => names.contains(n) ||
         Gunzip.decompressedName(n).exists(names.contains))
     }
-    // split on executors or the driver pool per opts.splitMode (the
-    // executor pass returns ~100 B chunk specs, never file bytes)
+    // split on executors or the driver pool, chosen by the listing's
+    // size (the executor pass returns ~100 B chunk specs, never file
+    // bytes)
     MrfSplitCache.getOrSplitAll(files, opts, conf, sc)
       .filter(p => headerKeys.forall(_.contains(p.headerKey)))
       .zipWithIndex

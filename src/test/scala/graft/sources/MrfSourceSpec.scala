@@ -17,6 +17,48 @@ class MrfSourceSpec extends SparkTestBase {
 
   private lazy val ffsPath = MrfFixtures.writeTemp("ffs.json", MrfFixtures.ffs).getAbsolutePath
 
+  /** A fresh directory holding the four fixture files — the smallest
+    * fleet that takes the executor split path.
+    */
+  private def fleetDir(prefix: String): java.io.File = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    Seq("a_ffs.json" -> MrfFixtures.ffs, "b_bundle.json" -> MrfFixtures.bundle,
+      "c_cap.json" -> MrfFixtures.capitation, "d_multi.json" -> MrfFixtures.multiPlan)
+      .foreach { case (name, json) =>
+        Files.write(new java.io.File(dir, name).toPath, json.getBytes("UTF-8"))
+      }
+    dir
+  }
+
+  /** Task counts of the `payer-mrf-split` executor jobs `body` submits,
+    * one entry per job. A marker job run after `body` flushes the
+    * listener bus: events arrive in order, so once the marker's start is
+    * seen, every earlier split job's start has been seen too.
+    */
+  private def splitJobTasks(body: => Unit): List[Int] = {
+    val sc = spark.sparkContext
+    val marker = "mrf-spec-marker-" + java.util.UUID.randomUUID()
+    val splitJobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val group = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+        if (group == marker) markerSeen.countDown()
+        else if (group != null && group.startsWith("payer-mrf-split"))
+          splitJobs.add(js.stageInfos.map(_.numTasks).sum)
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, "listener-bus flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(10, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+      splitJobs.asScala.toList
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("batch read: all three header keys present (TST01)") {
     val df = spark.read.format("payer-mrf").load(ffsPath)
     val keys = df.select("header_key").distinct().collect().map(_.getString(0)).toSet
@@ -323,16 +365,25 @@ class MrfSourceSpec extends SparkTestBase {
       .option("ignoreCorruptFiles", "true").load(dir.getAbsolutePath)
     assert(df.select("file_name").distinct().collect().map(_.getString(0)).toSet == Set("good.json"))
     assert(df.filter($"header_key" === "in_network").count() > 0)
-    // the executor split path applies the same corrupt-file policy
-    // (distinct chunkBytes → fresh cache keys, both modes exercised)
-    intercept[Exception] {
-      spark.read.format("payer-mrf").option("splitMode", "executors")
-        .option("chunkBytes", "4103").load(dir.getAbsolutePath).count()
+    // the executor split path applies the same corrupt-file policy: a
+    // 4-file directory takes it (the 2-file one above took the driver
+    // pool), and each read splits in one 4-task job
+    val fleet = Files.createTempDirectory("mrf-corrupt-fleet").toFile
+    Files.write(new java.io.File(fleet, "good.json").toPath, MrfFixtures.ffs.getBytes("UTF-8"))
+    Seq("bad_a.json", "bad_b.json", "bad_c.json").foreach { n =>
+      Files.write(new java.io.File(fleet, n).toPath, """{"in_network": [{"x": 1}""".getBytes("UTF-8"))
     }
-    val dfx = spark.read.format("payer-mrf")
-      .option("splitMode", "executors").option("chunkBytes", "4103")
-      .option("ignoreCorruptFiles", "true").load(dir.getAbsolutePath)
-    assert(dfx.select("file_name").distinct().collect().map(_.getString(0)).toSet == Set("good.json"))
+    val tasks = splitJobTasks {
+      intercept[Exception] {
+        spark.read.format("payer-mrf")
+          .option("chunkBytes", "4103").load(fleet.getAbsolutePath).count()
+      }
+      val dfx = spark.read.format("payer-mrf")
+        .option("chunkBytes", "4103")
+        .option("ignoreCorruptFiles", "true").load(fleet.getAbsolutePath)
+      assert(dfx.select("file_name").distinct().collect().map(_.getString(0)).toSet == Set("good.json"))
+    }
+    assert(tasks == List(4, 4), s"expected two 4-task split jobs, saw $tasks")
   }
 
   test("payloadAsArray + perElement is rejected (contradictory output shapes)") {
@@ -344,63 +395,58 @@ class MrfSourceSpec extends SparkTestBase {
     assert(e.getMessage.contains("mutually exclusive"), e.getMessage)
   }
 
-  test("splitMode rejects unknown values") {
-    val e = intercept[IllegalArgumentException] {
-      spark.read.format("payer-mrf").option("splitMode", "sideways").load(ffsPath).count()
+  test("a 4-file read splits on executor tasks; chunks match the driver path") {
+    val fleet = fleetDir("mrf-dist-e")
+    var distRows: Seq[Seq[Any]] = Nil
+    val distTasks = splitJobTasks {
+      distRows = spark.read.format("payer-mrf").option("chunkBytes", "4099")
+        .load(fleet.getAbsolutePath)
+        .select("file_name", "header_key", "json_payload")
+        .collect().map(_.toSeq).sortBy(_.toString).toSeq
     }
-    assert(e.getMessage.contains("splitMode"))
+    // the split itself ran as one executor task per file
+    assert(distTasks == List(4), s"expected one 4-task split job, saw $distTasks")
+    // the same files, one per scan, go through the driver pool (fresh
+    // copies: the split cache keys on the path) → identical rows
+    val single = fleetDir("mrf-dist-d")
+    var drvRows: Seq[Seq[Any]] = Nil
+    val drvTasks = splitJobTasks {
+      drvRows = single.listFiles().toSeq.flatMap { f =>
+        spark.read.format("payer-mrf").option("chunkBytes", "4099")
+          .load(f.getAbsolutePath)
+          .select("file_name", "header_key", "json_payload")
+          .collect().map(_.toSeq)
+      }.sortBy(_.toString)
+    }
+    assert(drvTasks.isEmpty, s"single-file reads must split on the driver, saw $drvTasks")
+    assert(distRows == drvRows)
   }
 
-  test("splitMode=executors runs the split as executor tasks; chunks match driver mode") {
-    import spark.implicits._
-    def fixtureDir(prefix: String): java.io.File = {
-      val dir = Files.createTempDirectory(prefix).toFile
-      Files.write(new java.io.File(dir, "a_ffs.json").toPath, MrfFixtures.ffs.getBytes("UTF-8"))
-      Files.write(new java.io.File(dir, "b_bundle.json").toPath, MrfFixtures.bundle.getBytes("UTF-8"))
-      Files.write(new java.io.File(dir, "c_cap.json").toPath, MrfFixtures.capitation.getBytes("UTF-8"))
-      dir
+  test("a 1-file stream splits on the driver; a 4-file stream submits split jobs") {
+    def stream(dir: java.io.File): Unit = {
+      val q = spark.readStream.format("payer-mrf").option("chunkBytes", "4111")
+        .load(dir.getAbsolutePath)
+        .writeStream.format("noop")
+        .option("checkpointLocation", Files.createTempDirectory("mrf-ckpt-rule").toString)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      assert(q.awaitTermination(60000), "stream did not terminate")
     }
-    val splitJobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val group = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-        if (group != null && group.startsWith("payer-mrf-split"))
-          splitJobs.add(js.stageInfos.map(_.numTasks).sum)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val dist = spark.read.format("payer-mrf")
-        .option("splitMode", "executors").option("chunkBytes", "4099")
-        .load(fixtureDir("mrf-dist-e").getAbsolutePath)
-        .select("file_name", "header_key", "json_payload")
-      val distRows = dist.collect().map(_.toSeq).sortBy(_.toString)
-      // the split itself ran as one executor task per file
-      val deadline = System.nanoTime() + 10_000_000_000L
-      while (splitJobs.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
-      assert(splitJobs.asScala.sum == 3,
-        s"expected a 3-task split job, saw ${splitJobs.asScala.toList}")
-      // same fixtures through the driver-pool path → identical rows
-      val drv = spark.read.format("payer-mrf")
-        .option("splitMode", "driver").option("chunkBytes", "4099")
-        .load(fixtureDir("mrf-dist-d").getAbsolutePath)
-        .select("file_name", "header_key", "json_payload")
-      val drvRows = drv.collect().map(_.toSeq).sortBy(_.toString)
-      assert(distRows.toSeq == drvRows.toSeq)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val one = Files.createTempDirectory("mrf-rule-1").toFile
+    Files.write(new java.io.File(one, "a_ffs.json").toPath, MrfFixtures.ffs.getBytes("UTF-8"))
+    val oneTasks = splitJobTasks(stream(one))
+    assert(oneTasks.isEmpty, s"a 1-file stream must keep the driver scan, saw $oneTasks")
+    // the streaming executor path runs one 1-task job per file
+    val fourTasks = splitJobTasks(stream(fleetDir("mrf-rule-4")))
+    assert(fourTasks == List(1, 1, 1, 1), s"expected four 1-task split jobs, saw $fourTasks")
   }
 
-  test("streaming with splitMode=executors matches batch and restarts cleanly") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("mrf-dist-s").toFile
-    Files.write(new java.io.File(dir, "a_ffs.json").toPath, MrfFixtures.ffs.getBytes("UTF-8"))
-    Files.write(new java.io.File(dir, "b_bundle.json").toPath, MrfFixtures.bundle.getBytes("UTF-8"))
-    Files.write(new java.io.File(dir, "c_cap.json").toPath, MrfFixtures.capitation.getBytes("UTF-8"))
+  test("streaming on the executor split path matches batch and restarts cleanly") {
+    val dir = fleetDir("mrf-dist-s")
     val checkpoint = Files.createTempDirectory("mrf-ckpt-dist").toString
     val outDir = Files.createTempDirectory("mrf-out-dist").toString
     def runOnce(): Unit = {
-      val q = spark.readStream.format("payer-mrf")
-        .option("splitMode", "executors").option("chunkBytes", "4101")
+      val q = spark.readStream.format("payer-mrf").option("chunkBytes", "4101")
         .load(dir.getAbsolutePath)
         .writeStream.format("parquet")
         .option("path", outDir).option("checkpointLocation", checkpoint)
@@ -408,9 +454,8 @@ class MrfSourceSpec extends SparkTestBase {
         .start()
       assert(q.awaitTermination(60000), "stream did not terminate")
     }
-    runOnce()
-    val batch = spark.read.format("payer-mrf")
-      .option("splitMode", "executors").option("chunkBytes", "4101")
+    assert(splitJobTasks(runOnce()).nonEmpty, "a 4-file stream must split on executors")
+    val batch = spark.read.format("payer-mrf").option("chunkBytes", "4101")
       .load(dir.getAbsolutePath)
     val streamed = spark.read.parquet(outDir)
     assert(streamed.count() == batch.count())
@@ -695,9 +740,9 @@ class MrfSourceSpec extends SparkTestBase {
     val opts = MrfOptions(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
       java.util.Map.of("path", dir.getAbsolutePath)))
     val conf = spark.sessionState.newHadoopConf()
-    val before = MrfFileSplitter.listFiles(opts, conf).map(_.getName)
+    val before = MrfFileSplitter.listFileStatuses(opts, conf).map(_.getPath.getName)
     Gunzip.decompressIfNeeded(new Path(gz.getAbsolutePath), conf)
-    val after = MrfFileSplitter.listFiles(opts, conf).map(_.getName)
+    val after = MrfFileSplitter.listFileStatuses(opts, conf).map(_.getPath.getName)
     assert(before == Seq("x.json.gz", "x.json.abc"),
       s"canonical ordering should place the archive at its sibling's slot, got $before")
     assert(after == Seq("x.json", "x.json.abc"),

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
 """Full-catalog sf1 parity sweep with a per-oracle watchdog.
 
-Usage: python3 tools/check_parity_sf1.py <sfDir> <verifyOutDir> [timeout_s]
+Usage: python3 tools/check_parity_sf1.py <sfDir> <verifyOutDir> [timeout_s] [resume_log]
 
 Same compare as check_parity.py (column names sorted, rows sorted,
 values normalized) but each DuckDB oracle runs under a watchdog
@@ -11,8 +11,15 @@ the OTHER 380 queries' degenerate-case coverage — a too-slow oracle is
 recorded as SKIP with its elapsed time, never silently dropped, so the
 exclusion list is part of the artifact. Emits one JSON line at the end
 (ok / failed / skipped lists) for COVERAGE.md.
+
+The first output line is `HEAD <git sha>` of the checkout the sweep
+checks. `resume_log` is an earlier run's output: its `OK   q...` lines
+are carried forward only when that log's HEAD line names the current
+commit, so a result of older code is never reported for newer code.
 """
 import json
+import os
+import subprocess
 import sys
 import threading
 
@@ -36,17 +43,41 @@ def driver_sort(df: pd.DataFrame) -> None:
     df[sorted(df.columns)].sort_values(by=sorted(df.columns))
 
 
+def head_sha():
+    """The checkout's commit, or None outside a git work tree."""
+    try:
+        return subprocess.run(
+            ["git", "rev-parse", "HEAD"], capture_output=True, text=True,
+            check=True, cwd=os.path.dirname(os.path.abspath(__file__)),
+        ).stdout.strip()
+    except (OSError, subprocess.CalledProcessError):
+        return None
+
+
+def carried_oks(log_path, head):
+    """The `OK   q...` names of a previous run's log, if it ran at `head`."""
+    lines = open(log_path).read().splitlines()
+    log_head = next(
+        (l.split()[1] for l in lines if l.startswith("HEAD ") and len(l.split()) > 1),
+        None)
+    if head is None or log_head != head:
+        print(f"RESUME ignored: {log_path} ran at HEAD {log_head}, "
+              f"this run is at HEAD {head}; re-running every query",
+              flush=True)
+        return set()
+    return {l.split()[1] for l in lines if l.startswith("OK   ")}
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     timeout_s = float(sys.argv[3]) if len(sys.argv) > 3 else 600.0
+    head = head_sha()
+    print(f"HEAD {head}", flush=True)
     # optional resume: a previous run's log — its "OK   q..." lines are
     # carried forward as ok without re-running (the sweep is ~3 h of
-    # DuckDB time; an interruption must not restart it from zero)
-    done = set()
-    if len(sys.argv) > 4:
-        for line in open(sys.argv[4]):
-            if line.startswith("OK   "):
-                done.add(line.split()[1])
+    # DuckDB time; an interruption must not restart it from zero), but
+    # only when that run checked the same commit
+    done = carried_oks(sys.argv[4], head) if len(sys.argv) > 4 else set()
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
     # sf1 makes a handful of quadratic completeness oracles memory-
@@ -56,7 +87,6 @@ def main():
     # recorded as SKIP); operators that cannot raise an OOM error,
     # recorded as SKIP below, never a kernel kill.
     con.execute("SET memory_limit='24GB'")
-    import os
     os.makedirs("/tmp/duck_spill", exist_ok=True)
     con.execute("SET temp_directory='/tmp/duck_spill'")
     for t in TABLES:
