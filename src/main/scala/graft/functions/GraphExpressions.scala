@@ -139,25 +139,45 @@ object WedgeCandidates {
       StructField("w", LongType, nullable = false))),
     containsNull = false)
 
-  /** Per-(JVM, broadcast id) cache of the DESERIALIZED filter: tasks
-    * deserialize the expression tree independently, so an instance
-    * `lazy val` alone would still rebuild the multi-MB long array per
-    * task — this map makes the rebuild once per executor JVM. SIZE
-    * BOUNDED: a filter is always rebuildable from the broadcast bytes,
-    * so when more than a handful of distinct filters accumulate (a
-    * long session running many triangle queries, kTruss peel rounds)
-    * the cache simply clears and repopulates on demand — worst case
-    * one extra deserialization per task of a stage that straddled the
-    * clear, never a correctness event.
+  /** Per-JVM cache of the DESERIALIZED filter: tasks deserialize the
+    * expression tree independently, so an instance `lazy val` alone
+    * would still rebuild the multi-MB long array per task — this map
+    * makes the rebuild once per executor JVM.
+    *
+    * Keyed by the IDENTITY of the broadcast's byte array, not by
+    * `bcast.id`: broadcast ids restart at 0 in every SparkContext, so
+    * an id key hands a later context an earlier context's filter, whose
+    * false negatives silently drop triangles. Every task of a JVM reads
+    * the same array out of the block manager, and a `WeakHashMap` over
+    * arrays compares by identity (arrays inherit `Object`'s equals and
+    * hashCode). Keys are weak, so an entry goes once its broadcast's
+    * bytes are unreachable; the filter copies the bytes into its own
+    * words and cannot pin its key. SIZE BOUNDED for broadcasts that
+    * stay alive (a long session of triangle queries, kTruss peel
+    * rounds): past [[MaxCachedFilters]] one entry is evicted per
+    * insert — a filter is always rebuildable from its bytes, so an
+    * eviction costs at most one extra deserialization per task.
     */
-  private val filterCache =
-    new java.util.concurrent.ConcurrentHashMap[Long, BlockedBloom]()
+  private val filterCache = new java.util.WeakHashMap[Array[Byte], BlockedBloom]()
+
+  private val MaxCachedFilters = 8
 
   def filterFor(
       bcast: org.apache.spark.broadcast.Broadcast[Array[Byte]]): BlockedBloom = {
-    if (filterCache.size > 8) filterCache.clear()
-    filterCache.computeIfAbsent(
-      bcast.id, _ => BlockedBloom.deserialize(bcast.value))
+    val bytes = bcast.value
+    filterCache.synchronized {
+      val hit = filterCache.get(bytes)
+      if (hit != null) hit
+      else {
+        val keys = filterCache.keySet.iterator
+        if (filterCache.size >= MaxCachedFilters && keys.hasNext) {
+          keys.next(); keys.remove()
+        }
+        val f = BlockedBloom.deserialize(bytes)
+        filterCache.put(bytes, f)
+        f
+      }
+    }
   }
 
   /** Static kernel: i < j pairs (in (d, n) key order — the list is

@@ -1,6 +1,8 @@
 package graft.pipeline
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
 
@@ -133,9 +135,9 @@ object MrfPipeline {
         col("item.negotiated_rates").as("negotiated_rates"),
         col("item.bundled_codes").as("bundled_codes"))
       // byte-identical duplicate items collapse to ONE row (see
-      // [[skInNetwork]]); the exchange this costs doubles as the
-      // co-partitioning on sk_in_network_id that the downstream
-      // rates/prices joins reuse
+      // [[skInNetwork]]); on this lazy frame the exchange this costs
+      // doubles as the co-partitioning on sk_in_network_id that joins
+      // among its derived frames reuse ([[silver]] materializes it)
       .dropDuplicates("sk_in_network_id")
 
   /** Silver: in_network_rates — one row per negotiated_rates element
@@ -278,7 +280,7 @@ object MrfPipeline {
     viaRefs.unionByName(inline)
   }
 
-  /** Convenience: all silver tables from one bronze frame. */
+  /** All eight silver tables of one bronze frame (see [[silver]]). */
   final case class Silver(
       header: DataFrame,
       providersXPayer: DataFrame,
@@ -289,8 +291,67 @@ object MrfPipeline {
       rateProviderGroups: DataFrame,
       bundledCodes: DataFrame)
 
+  /** An eager local checkpoint with its partitions merged (narrowly,
+    * no shuffle) down to the session's advisory partition size
+    * (`spark.sql.adaptive.advisoryPartitionSizeInBytes`), measured on
+    * the stored blocks. Adaptive execution sizes a shuffle's partitions
+    * for parallelism, down to 1 MB each; kept as the silver checkpoint's
+    * layout, every one of them becomes a file in each of six tables,
+    * and every later read of a small table pays a task and a footer
+    * per file.
+    */
+  private def advisorySized(ckpt: DataFrame): DataFrame =
+    ckpt.queryExecution.optimizedPlan match {
+      case lr: LogicalRDD =>
+        val spark = ckpt.sparkSession
+        val bytes = spark.sparkContext.getRDDStorageInfo
+          .find(_.id == lr.rdd.id).fold(0L)(i => i.memSize + i.diskSize)
+        val target = JavaUtils.byteStringAsBytes(
+          spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+        val n = math.max(1L, (bytes + target - 1) / target)
+        if (n < lr.rdd.getNumPartitions) ckpt.coalesce(n.toInt) else ckpt
+      case _ => ckpt
+    }
+
+  /** All eight silver tables from one BATCH bronze frame.
+    *
+    * One parse per call: `in_network` is parsed, hashed and deduplicated
+    * exactly once. [[inNetworkCodes]] (still carrying the nested
+    * `negotiated_rates` and `bundled_codes`) is materialized as a local
+    * checkpoint, and `codes`, `rates`, `prices`, `parProviders`,
+    * `rateProviderGroups` and `bundledCodes` are narrow projections of
+    * it — writing all six reads the checkpoint blocks six times instead
+    * of re-reading bronze and re-running `from_json`, the
+    * `xxhash64(to_json(item))` key and the dedup shuffle per table.
+    * `header` and `providersXPayer` stay lazy over bronze, as do the
+    * standalone per-table functions above.
+    *
+    * Layout: the checkpoint's partitions are merged to the session's
+    * advisory partition size ([[advisorySized]]), and it keeps the
+    * plan's size estimate, so joins against a small side still
+    * broadcast. It does not declare the dedup's hash partitioning on
+    * `sk_in_network_id` (see [[graft.operators.PartitionedCheckpoint]]),
+    * so a shuffled join among these frames re-shuffles them: pinning
+    * that layout takes a fixed partition count, which also fixes how
+    * many files each table writes.
+    *
+    * Checkpoint lifetime: the blocks stay in the executors' block
+    * managers until the returned frames become unreachable (the
+    * `ContextCleaner` then drops them) or `graft.Bench
+    * .freeLocalCheckpoints` frees them. The checkpoint truncates
+    * lineage, so the blocks are the only copy: after an executor loss,
+    * call `silver` again.
+    *
+    * Batch only: the materialization is an action, which a streaming
+    * frame cannot run. For a streaming bronze, call `silver` on each
+    * micro-batch inside `writeStream.foreachBatch`.
+    */
   def silver(bronze: DataFrame): Silver = {
-    val c = inNetworkCodes(bronze)
+    require(!bronze.isStreaming,
+      "MrfPipeline.silver needs a batch bronze frame (it materializes the parsed " +
+        "in_network items once); for a streaming bronze, call it on each " +
+        "micro-batch inside writeStream.foreachBatch")
+    val c = advisorySized(inNetworkCodes(bronze).localCheckpoint(true))
     val r = inNetworkRates(c)
     val h = header(bronze)
     Silver(

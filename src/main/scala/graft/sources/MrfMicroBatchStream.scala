@@ -263,9 +263,13 @@ final class MrfMicroBatchStream(
     if (splitError != null) throw splitError
   }
 
+  /** Once the split has finished (or failed, whose path already
+    * cancelled) no split job of this stream can be running, and a
+    * cancel would only log "Cannot find active jobs" for the group.
+    */
   override def stop(): Unit = {
     splitter.interrupt()
-    cancelSplitJobs()
+    if (!synchronized(splitDone)) cancelSplitJobs()
   }
 }
 

@@ -154,7 +154,8 @@ final class MrfPartitionReader(
 
 /** Driver-side LRU of per-file split results, keyed by (path, length,
   * mtime, chunk sizing). A query DAG that references the bronze frame
-  * from several branches (the silver star build does it five times)
+  * from several branches (the silver star build reads it for the
+  * in_network checkpoint, the header and the provider references)
   * plans a scan per branch — without this cache each plan re-streams
   * the whole multi-GB file through the splitter. Entries are chunk
   * SPECS only (~100 B each), never payload bytes.

@@ -81,4 +81,38 @@ class WedgeCandidatesSpec extends SparkTestBase {
     assert(runKernel(Seq.empty, Seq.empty).isEmpty)
     assert(runKernel(Seq(7L), Seq.empty).isEmpty)
   }
+
+  /** A broadcast with a chosen id and value — stands in for broadcasts
+    * of different SparkContexts, whose ids both restart at 0.
+    */
+  private class FixedBroadcast(id: Long, bytes: Array[Byte])
+      extends org.apache.spark.broadcast.Broadcast[Array[Byte]](id) {
+    override protected def getValue(): Array[Byte] = bytes
+    override protected def doUnpersist(blocking: Boolean): Unit = ()
+    override protected def doDestroy(blocking: Boolean): Unit = ()
+  }
+
+  test("filterFor: broadcasts sharing an id each get their own filter") {
+    def bloomOf(keys: Seq[Long]): Array[Byte] = {
+      val b = BlockedBloom.create(1024L, 16)
+      keys.foreach(b.put)
+      b.serialized
+    }
+    val (ka, kb) = (key(1L, 2L), key(3L, 4L))
+    val a = new FixedBroadcast(0L, bloomOf(Seq(ka)))
+    val b = new FixedBroadcast(0L, bloomOf(Seq(kb)))
+    val fa = WedgeCandidates.filterFor(a)
+    val fb = WedgeCandidates.filterFor(b)
+    assert(fa.mightContain(ka) && !fa.mightContain(kb))
+    assert(fb.mightContain(kb) && !fb.mightContain(ka),
+      "a second broadcast with a reused id got the first one's filter")
+    // the cache still serves repeat lookups, and stays correct after
+    // more distinct filters than it holds have passed through it
+    assert(WedgeCandidates.filterFor(a) eq fa)
+    (1 to 20).foreach { i =>
+      WedgeCandidates.filterFor(new FixedBroadcast(0L, bloomOf(Seq(key(i, -i)))))
+    }
+    assert(WedgeCandidates.filterFor(b).mightContain(kb))
+    assert(!WedgeCandidates.filterFor(b).mightContain(ka))
+  }
 }

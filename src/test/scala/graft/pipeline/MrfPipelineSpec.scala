@@ -2,6 +2,10 @@ package graft.pipeline
 
 import graft.SparkTestBase
 import graft.sources.MrfFixtures
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Silver/gold parity with the reference demo ETL on the synthesized FFS
@@ -52,6 +56,69 @@ class MrfPipelineSpec extends SparkTestBase {
     // every price joins back to a code
     assert(
       s.prices.join(s.codes, "sk_in_network_id").count() == 3)
+  }
+
+  /** The six silver frames built on the parsed `in_network` items. */
+  private def inNetworkFrames(s: MrfPipeline.Silver): Seq[(String, DataFrame)] = Seq(
+    "codes" -> s.codes, "rates" -> s.rates, "prices" -> s.prices,
+    "parProviders" -> s.parProviders, "rateProviderGroups" -> s.rateProviderGroups,
+    "bundledCodes" -> s.bundledCodes)
+
+  /** Stages with shuffle output that `body` runs. A marker job after
+    * `body` flushes the listener bus: events arrive in order, so once
+    * the marker's start is seen, every earlier stage's end has been too.
+    */
+  private def shuffleWritingStages(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val marker = "mrf-pipeline-marker-" + java.util.UUID.randomUUID()
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (Option(e.stageInfo.taskMetrics).exists(_.shuffleWriteMetrics.recordsWritten > 0))
+          stages.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          markerSeen.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, "listener-bus flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerSeen.await(10, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+      stages.get()
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("silver parses and deduplicates in_network once for all six derived tables") {
+    val p = MrfFixtures.writeTemp("ffs.json", MrfFixtures.ffs).getAbsolutePath
+    val fresh = spark.read.format("payer-mrf").load(p)
+    var s: MrfPipeline.Silver = null
+    val shuffles = shuffleWritingStages {
+      s = MrfPipeline.silver(fresh)
+      inNetworkFrames(s).foreach { case (_, df) =>
+        df.write.format("noop").mode("overwrite").save()
+      }
+    }
+    assert(shuffles <= 1, s"silver + six writes ran $shuffles shuffle-writing stages")
+    val leaves = inNetworkFrames(s).map { case (name, df) =>
+      val plan = df.queryExecution.optimizedPlan
+      assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs]))),
+        s"$name re-parses bronze:\n$plan")
+      val rdds = plan.collect { case lr: LogicalRDD => lr.rdd.id }
+      assert(rdds.size == 1, s"$name reads ${rdds.size} checkpoint leaves:\n$plan")
+      rdds.head
+    }
+    assert(leaves.distinct.size == 1, s"the six tables read different checkpoints: $leaves")
+  }
+
+  test("silver rejects a streaming bronze and points to foreachBatch") {
+    val p = MrfFixtures.writeTemp("ffs.json", MrfFixtures.ffs).getAbsolutePath
+    val streaming = spark.readStream.format("payer-mrf").load(p)
+    val e = intercept[IllegalArgumentException](MrfPipeline.silver(streaming))
+    assert(e.getMessage.contains("foreachBatch"), e.getMessage)
   }
 
   test("byte-identical duplicate in_network items dedupe instead of multiplying gold") {

@@ -441,6 +441,47 @@ class MrfSourceSpec extends SparkTestBase {
     assert(fourTasks == List(1, 1, 1, 1), s"expected four 1-task split jobs, saw $fourTasks")
   }
 
+  test("a completed 4-file AvailableNow stream cancels no finished split job group") {
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.scheduler.DAGScheduler")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    val warns = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "mrf-cancel-warns", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        warns.add(e.getMessage.getFormattedMessage)
+    }
+    appender.start()
+    logger.addAppender(appender)
+    def cancelWarns(group: String): Int =
+      warns.asScala.count(m => m.contains("Failed to cancel job group") && m.contains(group))
+    try {
+      val splits = splitJobTasks {
+        val q = spark.readStream.format("payer-mrf").option("chunkBytes", "4111")
+          .load(fleetDir("mrf-cancel").getAbsolutePath)
+          .writeStream.format("noop")
+          .option("checkpointLocation", Files.createTempDirectory("mrf-ckpt-cancel").toString)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        assert(q.awaitTermination(60000), "stream did not terminate")
+      }
+      assert(splits == List(1, 1, 1, 1), s"expected four 1-task split jobs, saw $splits")
+      // the source stops before awaitTermination returns, and the
+      // scheduler handles its events in order: the marker job that
+      // splitJobTasks ran after the stream came after any cancel
+      assert(cancelWarns("payer-mrf-split") == 0,
+        s"stop() cancelled a finished split: ${warns.asScala.toList}")
+      // the appender does see the warning when a cancel has no job
+      spark.sparkContext.cancelJobGroup("mrf-spec-no-such-group")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      assert(cancelWarns("mrf-spec-no-such-group") == 1)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
+
   test("streaming on the executor split path matches batch and restarts cleanly") {
     val dir = fleetDir("mrf-dist-s")
     val checkpoint = Files.createTempDirectory("mrf-ckpt-dist").toString
