@@ -116,7 +116,7 @@ object PartitionedCheckpoint {
               s"column of the frame (have: ${lr.output.map(_.name).mkString(", ")})"))
         }
         GraftInternal.rddWithPartitioning(
-          spark, lr.output, lr.rdd, HashPartitioning(keyAttrs, n))
+          spark, lr.output, lr.rdd, HashPartitioning(keyAttrs, n), lr.stats)
       case _ => ckpt // unexpected plan shape: correct, just re-shuffles
     }
     (out, rows)

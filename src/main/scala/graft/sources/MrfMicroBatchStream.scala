@@ -3,7 +3,6 @@ package graft.sources
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
 
@@ -20,14 +19,14 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
   * A background thread discovers chunks and appends their specs — byte
   * ranges only, never payload bytes — to a ledger in sorted file order
   * (global ordinals must be reproducible, so no cross-file
-  * interleaving). The discovery work itself either streams
-  * incrementally through the driver (a single file, or a small input:
-  * chunk-level emission) or runs as a pipeline of per-file one-task
-  * Spark jobs on executors (a fleet past
-  * [[MrfFileSplitter.autoThreshold]]: split I/O scales with the cluster,
-  * ledger appends happen per completed file). `latestOffset` reports
-  * the ledger frontier; `commit` GCs entries at or below the committed
-  * ordinal. With `Trigger.AvailableNow`, Spark calls
+  * interleaving). It splits through the same code as the batch scan,
+  * [[MrfFileSplitter.splitFiles]]: a single listed file streams through
+  * the driver chunk by chunk (seconds to first batch on a multi-TB
+  * file); two or more split in one executor job with one task per file
+  * (split I/O scales with the cluster), each finished file appended once
+  * every earlier file is. `latestOffset` reports the ledger frontier;
+  * `commit` GCs entries at or below the committed ordinal. With
+  * `Trigger.AvailableNow`, Spark calls
   * [[prepareForTriggerAvailableNow]] first: we block until the split
   * finishes so the terminal offset is known — the stream then ends
   * naturally (the reference had no end-of-stream story; demo notebooks
@@ -50,7 +49,7 @@ final class MrfMicroBatchStream(
     // session, and must not touch other queries' split jobs (unique
     // group id)
     owningContext: org.apache.spark.SparkContext)
-    extends MicroBatchStream with SupportsTriggerAvailableNow with Logging {
+    extends MicroBatchStream with SupportsTriggerAvailableNow {
 
   // ---- chunk ledger (driver memory: ~100 B per chunk spec) ----
   private val ledger = ArrayBuffer.empty[MrfInputPartition]
@@ -60,23 +59,33 @@ final class MrfMicroBatchStream(
 
   private val splitJobGroup = MrfFileSplitter.freshSplitJobGroup()
 
+  /** Append one spec at the ledger frontier, renumbered to its global
+    * ordinal (the frontier survives commit GC).
+    */
+  private def append(p: MrfInputPartition): Unit = synchronized {
+    ledger += p.copy(ordinal = ledgerBase + ledger.size)
+    notifyAll()
+  }
+
   private val splitter = new Thread("payer-mrf-splitter") {
     override def run(): Unit =
       try {
-        val files = MrfFileSplitter.listFileStatuses(opts, conf)
-        // the executor path splits each file as a one-task Spark job, a
-        // few files in flight at a time; specs append to the ledger in
-        // FILE order so ordinals stay deterministic. A SINGLE-file
-        // stream always keeps the driver-side incremental scan — it
-        // emits chunk-by-chunk (seconds to first batch on a multi-TB
-        // file) where a per-file job could only emit at file
-        // completion; multi-file streams switch to executors at the
-        // same ≥4-files-or-≥256MB threshold as the batch scan.
-        // Sizes come from the listing's own FileStatuses — no second
-        // stat round-trip per file.
-        val useExecutors = files.size >= 2 &&
-          MrfFileSplitter.autoThreshold(files.size, files.map(_.getLen).sum)
-        if (useExecutors) runDistributed(files) else runDriverSide(files)
+        // one file: chunk-by-chunk into the ledger from the driver scan.
+        // Several: one executor job; a finished file's specs wait in
+        // `done` until every earlier file is appended, so ordinals
+        // follow FILE order whatever order the tasks finish in
+        val files = MrfFileSplitter.listFileStatuses(opts, conf).map(_.getPath)
+        val done = new Array[Seq[MrfInputPartition]](files.size)
+        var next = 0
+        MrfFileSplitter.splitFiles(files, opts, conf, owningContext, splitJobGroup)(
+          append, (i, parts) => MrfMicroBatchStream.this.synchronized {
+            done(i) = parts
+            while (next < done.length && done(next) != null) {
+              done(next).foreach(append)
+              done(next) = null
+              next += 1
+            }
+          })
         MrfMicroBatchStream.this.synchronized {
           splitDone = true
           MrfMicroBatchStream.this.notifyAll()
@@ -89,101 +98,8 @@ final class MrfMicroBatchStream(
             MrfMicroBatchStream.this.notifyAll()
           }
       }
-
-    /** Chunks are emitted INCREMENTALLY — micro-batches start flowing
-      * while a multi-TB file is still being scanned. The per-chunk
-      * callback checks the interrupt flag so `stop()` actually stops
-      * the scan at chunk granularity — blocking filesystem reads ignore
-      * interrupts, and without the check a dead query's splitter would
-      * keep streaming terabytes through the driver (and growing the
-      * ledger) for hours.
-      */
-    private def runDriverSide(files: Seq[org.apache.hadoop.fs.FileStatus]): Unit = {
-      var ordinal = 0L
-      var stopped = false
-      val it = files.iterator
-      while (!stopped && it.hasNext) {
-        val f = it.next().getPath
-        try MrfFileSplitter.splitFile(f, opts, conf, ordinal) { p =>
-          if (Thread.currentThread().isInterrupted)
-            throw new InterruptedException("payer-mrf: split stopped with the query")
-          ordinal = p.ordinal + 1
-          MrfMicroBatchStream.this.synchronized {
-            ledger += p
-            MrfMicroBatchStream.this.notifyAll()
-          }
-        } catch {
-          // the interrupt family stops the scan — the SAME classes
-          // splitFileGuarded rethrows: classifying a blocking read's
-          // InterruptedIOException/ClosedByInterruptException as
-          // "corrupt" would make stop() fall through to the NEXT file
-          // (potentially a full multi-GB decompress before the next
-          // interrupt-flag check)
-          case _: InterruptedException | _: java.io.InterruptedIOException |
-              _: java.nio.channels.ClosedByInterruptException => stopped = true
-          // a missing file is its own condition, not a corrupt one —
-          // the executor path (splitFileGuarded) rethrows it even under
-          // ignoreCorruptFiles, and the two paths must classify
-          // identically or the file count would change semantics
-          case e: java.io.FileNotFoundException => throw e
-          case e: Exception if opts.ignoreCorruptFiles =>
-            // deterministic even on restart: the splitter fails at the
-            // same byte, so any partial chunks re-derive identically
-            logWarning(s"payer-mrf: skipping corrupt file $f", e)
-        }
-      }
-      if (stopped) throw new InterruptedException("payer-mrf: split stopped with the query")
-    }
-
-    /** Pipeline of per-file executor split jobs (bounded concurrency,
-      * daemon threads); results land in the ledger in file order as
-      * each job finishes. On interruption (query stop) the queue is
-      * drained with shutdownNow and the split job group is cancelled —
-      * a dead query must not keep a cluster splitting files.
-      */
-    private def runDistributed(files: Seq[org.apache.hadoop.fs.FileStatus]): Unit = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(files.size, 8)),
-        new java.util.concurrent.ThreadFactory {
-          private val n = new java.util.concurrent.atomic.AtomicInteger()
-          override def newThread(r: Runnable): Thread = {
-            val t = new Thread(r, s"payer-mrf-split-${n.incrementAndGet()}")
-            t.setDaemon(true)
-            t
-          }
-        })
-      try {
-        val futures = files.map { st =>
-          pool.submit(new java.util.concurrent.Callable[Seq[MrfInputPartition]] {
-            override def call(): Seq[MrfInputPartition] =
-              MrfSplitCache.getOrSplitOne(st, opts, conf, owningContext, splitJobGroup)
-          })
-        }
-        var ordinal = 0L
-        futures.foreach { fut =>
-          val parts = fut.get()
-          MrfMicroBatchStream.this.synchronized {
-            parts.foreach { p =>
-              ledger += p.copy(ordinal = ordinal)
-              ordinal += 1
-            }
-            MrfMicroBatchStream.this.notifyAll()
-          }
-        }
-        pool.shutdown()
-      } catch {
-        case t: Throwable =>
-          pool.shutdownNow()
-          cancelSplitJobs()
-          throw t
-      }
-    }
   }
 
-  /** Cancel THIS stream's in-flight executor split jobs. */
-  private def cancelSplitJobs(): Unit =
-    try owningContext.cancelJobGroup(splitJobGroup)
-    catch { case _: Throwable => () } // context may already be stopped
   splitter.setDaemon(true)
   splitter.start()
 
@@ -263,13 +179,17 @@ final class MrfMicroBatchStream(
     if (splitError != null) throw splitError
   }
 
-  /** Once the split has finished (or failed, whose path already
-    * cancelled) no split job of this stream can be running, and a
-    * cancel would only log "Cannot find active jobs" for the group.
+  /** Interrupt the splitter and cancel THIS stream's split job group.
+    * Once the split has finished (or failed, when the interrupted wait
+    * already cancelled its job) no split job of this stream can be
+    * running, and a cancel would only log "Cannot find active jobs" for
+    * the group.
     */
   override def stop(): Unit = {
     splitter.interrupt()
-    if (!synchronized(splitDone)) cancelSplitJobs()
+    if (!synchronized(splitDone))
+      try owningContext.cancelJobGroup(splitJobGroup)
+      catch { case _: Throwable => () } // context may already be stopped
   }
 }
 

@@ -23,14 +23,12 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     giant first batch.
   *
   * Where the split pass runs is chosen from the listed input, not set by
-  * the user. A small input streams its bytes through the driver (the
-  * reference's architecture, `JsonMRFSource.scala:59-180`). Once the
-  * input is big enough to amortize a job (≥ 4 files or ≥ 256 MB) the
-  * split runs on executors, one Spark task per file, and ships back only
-  * ~100-byte chunk SPECS, so split I/O scales with the cluster instead
-  * of the driver NIC. A SINGLE-file stream always stays on the driver's
-  * incremental scan, which emits chunk-by-chunk instead of at file
-  * completion.
+  * the user. A single file streams its bytes through the driver (the
+  * reference's architecture, `JsonMRFSource.scala:59-180`), chunk by
+  * chunk. Two or more files split in one executor job, one Spark task
+  * per file, which ships back only ~100-byte chunk SPECS, so split I/O
+  * scales with the cluster instead of the driver NIC. Batch reads and
+  * streams follow the same rule.
   */
 final case class MrfOptions(
     paths: Seq[String],

@@ -152,13 +152,14 @@ final class MrfPartitionReader(
   override def close(): Unit = ()
 }
 
-/** Driver-side LRU of per-file split results, keyed by (path, length,
-  * mtime, chunk sizing). A query DAG that references the bronze frame
-  * from several branches (the silver star build reads it for the
-  * in_network checkpoint, the header and the provider references)
-  * plans a scan per branch — without this cache each plan re-streams
-  * the whole multi-GB file through the splitter. Entries are chunk
-  * SPECS only (~100 B each), never payload bytes.
+/** Driver-side LRU of per-file split results for batch planning, keyed
+  * by (path, length, mtime, chunk sizing). A query DAG that references
+  * the bronze frame from several branches (the silver build reads it for
+  * the in_network checkpoint, the header and the provider references)
+  * plans a scan per branch — without this cache each plan re-streams the
+  * whole multi-GB file through the splitter. Entries are chunk SPECS only
+  * (~100 B each), never payload bytes. The stream does not use it: its
+  * ledger is derived once per query.
   */
 object MrfSplitCache {
 
@@ -184,69 +185,41 @@ object MrfSplitCache {
         size() > MaxFiles
     }
 
-  /** One file through the cache; on a miss the split runs as a one-task
-    * Spark job in `jobGroup` — the streaming splitter uses this to
-    * pipeline per-file executor jobs. Cache hits also make
-    * checkpoint-restart re-derivation instant within a driver JVM.
-    */
-  def getOrSplitOne(
-      status: org.apache.hadoop.fs.FileStatus,
-      opts: MrfOptions,
-      conf: org.apache.hadoop.conf.Configuration,
-      sc: org.apache.spark.SparkContext,
-      jobGroup: String): Seq[MrfInputPartition] = {
-    val file = status.getPath
-    val key = keyOf(status, opts)
-    cache.synchronized(Option(cache.get(key))) match {
-      case Some(hit) => hit
-      case None =>
-        val result = MrfFileSplitter.splitFilesDistributed(
-          Seq(file), opts, conf, sc, jobGroup)(file.toString)
-        cache.synchronized(cache.put(key, result))
-        result
-    }
-  }
-
-  /** Split a fleet of files, serving cache hits and routing the misses
-    * to an executor split job when they pass
-    * [[MrfFileSplitter.autoThreshold]] and to the driver thread pool
-    * otherwise. Results come back in `files` order with per-file
-    * ordinals — the caller assigns global ordinals.
+  /** Split a fleet of files, serving cache hits and splitting the misses
+    * by the one rule of [[MrfFileSplitter.splitFiles]]: a single miss on
+    * the driver, two or more in one executor job. Results come back in
+    * `statuses` order with per-file ordinals — the caller assigns global
+    * ordinals.
     */
   def getOrSplitAll(
       statuses: Seq[org.apache.hadoop.fs.FileStatus],
       opts: MrfOptions,
       conf: org.apache.hadoop.conf.Configuration,
       sc: org.apache.spark.SparkContext): Seq[MrfInputPartition] = {
-    val keyed = statuses.map(st => (st.getPath, st.getLen, keyOf(st, opts)))
-    val hits: Map[String, Seq[MrfInputPartition]] = keyed.flatMap { case (f, _, k) =>
-      cache.synchronized(Option(cache.get(k))).map(f.toString -> _)
+    val keyed = statuses.map(st => st.getPath -> keyOf(st, opts))
+    val hits: Map[Path, Seq[MrfInputPartition]] = keyed.flatMap { case (f, k) =>
+      cache.synchronized(Option(cache.get(k))).map(f -> _)
     }.toMap
-    val misses = keyed.filterNot { case (f, _, _) => hits.contains(f.toString) }
-    val split: Map[String, Seq[MrfInputPartition]] =
-      if (misses.isEmpty) Map.empty
-      else {
-        val out =
-          if (MrfFileSplitter.autoThreshold(misses.size, misses.map(_._2).sum))
-            MrfFileSplitter.splitFilesDistributed(misses.map(_._1), opts, conf, sc)
-          else
-            MrfFileSplitter.splitFilesDriverPool(misses.map(_._1), opts, conf)
-        misses.foreach { case (f, _, k) =>
-          cache.synchronized(cache.put(k, out(f.toString)))
-        }
-        out
+    val misses = keyed.filterNot { case (f, _) => hits.contains(f) }
+    val split = Array.fill[Seq[MrfInputPartition]](misses.size)(Vector.empty)
+    if (misses.nonEmpty) {
+      MrfFileSplitter.splitFiles(misses.map(_._1), opts, conf, sc)(
+        p => split(0) = split(0) :+ p, (i, parts) => split(i) = parts)
+      misses.zip(split).foreach { case ((_, k), parts) =>
+        cache.synchronized(cache.put(k, parts))
       }
+    }
     // assemble from the local results, NOT the cache — a fleet larger
     // than the LRU capacity would otherwise evict entries between the
     // put and the read-back
-    keyed.map { case (f, _, _) => hits.getOrElse(f.toString, split(f.toString)) }
-      .flatten
+    val splitByPath = misses.map(_._1).zip(split).toMap
+    keyed.flatMap { case (f, _) => hits.getOrElse(f, splitByPath(f)) }
   }
 }
 
-/** Driver-side per-file split: list files, gunzip when needed, run the
-  * [[JsonSplitter]], and assign global ordinals. Shared by the batch scan
-  * and the micro-batch stream.
+/** The split pass: list files, gunzip when needed and run the
+  * [[JsonSplitter]] on the driver or on executors. Shared by the batch
+  * scan and the micro-batch stream.
   */
 object MrfFileSplitter extends org.apache.spark.internal.Logging {
 
@@ -366,33 +339,54 @@ object MrfFileSplitter extends org.apache.spark.internal.Logging {
     }
   }
 
+  /** The split rule, shared by the batch scan and the stream: a single
+    * file splits on the driver, its chunks reaching `onChunk` as the
+    * splitter finds them (micro-batches can start while a multi-TB file
+    * is still being scanned); two or more files split in ONE executor job
+    * with one task per file, each file's specs reaching `onFile` with
+    * its index in `files` as its task finishes. Either way every file
+    * runs the same [[splitFileGuarded]] body. Ordinals are per file —
+    * callers renumber.
+    */
+  def splitFiles(
+      files: Seq[Path],
+      opts: MrfOptions,
+      conf: org.apache.hadoop.conf.Configuration,
+      sc: org.apache.spark.SparkContext,
+      jobGroup: String = freshSplitJobGroup())(
+      onChunk: MrfInputPartition => Unit,
+      onFile: (Int, Seq[MrfInputPartition]) => Unit): Unit =
+    if (files.size == 1)
+      splitFileGuarded(files.head.toString, opts, new SerializableHadoopConf(conf))(onChunk)
+    else if (files.nonEmpty)
+      splitFilesDistributed(files, opts, conf, sc, jobGroup)(onFile)
+
   /** One file through the splitter with the source's corrupt-file
     * policy applied. Takes the path as a String and the conf in its
     * serializable wrapper so the SAME function is the body of both the
-    * driver pool and the executor split task — determinism between the
+    * driver split and the executor split task — determinism between the
     * two split paths is by construction, not by parallel maintenance.
     */
   def splitFileGuarded(
       file: String,
       opts: MrfOptions,
-      conf: SerializableHadoopConf): Seq[MrfInputPartition] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[MrfInputPartition]
+      conf: SerializableHadoopConf)(emit: MrfInputPartition => Unit): Unit = {
+    var kept = 0
     // per-chunk kill check: an executor split task otherwise ignores
     // cancelJobGroup entirely (interruptOnCancel is false and a
     // one-element map never re-checks the kill flag), so a dead query
-    // would keep splitting multi-GB files to completion
+    // would keep splitting multi-GB files to completion. On the driver
+    // there is no TaskContext — the kill signal is the stream's
+    // interrupt of its splitter thread, checked at the same per-chunk
+    // granularity (blocking filesystem reads ignore interrupts)
     val ctx = Option(org.apache.spark.TaskContext.get())
-    val emit: MrfInputPartition => Unit = p => {
-      // driver-pool callers have no TaskContext — there the kill
-      // signal is the pool's shutdownNow() thread interrupt, checked
-      // at the same per-chunk granularity
+    try splitFile(new Path(file), opts, conf.value) { p =>
       if (ctx.exists(_.isInterrupted()) ||
           (ctx.isEmpty && Thread.currentThread().isInterrupted))
         throw new org.apache.spark.TaskKilledException("payer-mrf split cancelled")
-      out += p
-    }
-    try splitFile(new Path(file), opts, conf.value, 0)(emit)
-    catch {
+      emit(p)
+      kept += 1
+    } catch {
       case e @ (_: InterruptedException | _: java.io.InterruptedIOException |
           _: java.nio.channels.ClosedByInterruptException |
           _: org.apache.spark.TaskKilledException |
@@ -406,88 +400,39 @@ object MrfFileSplitter extends org.apache.spark.internal.Logging {
         // one corrupt file must not kill a fleet-sized job. Chunks
         // split before the failure point are KEPT — the same
         // "contents already read are returned" contract as
-        // spark.sql.files.ignoreCorruptFiles, and identical to the
-        // incremental streaming splitter (which cannot retract
-        // already-emitted chunks), so the driver and executor paths
-        // derive the same ledger deterministically for genuinely corrupt
-        // bytes (same failure byte). Like Spark's flag, a TRANSIENT
-        // I/O error is indistinguishable from corruption here — users
-        // who cannot tolerate that ambiguity leave the flag off.
-        logWarning(
-          s"payer-mrf: corrupt file $file — keeping ${out.size} complete chunks", e)
-    }
-    out.toSeq
-  }
-
-  /** Driver-side parallel split: one thread per file (each file's scan
-    * is inherently sequential; the fleet is not). All file bytes flow
-    * through the driver — fine up to a few GB, the driver NIC beyond.
-    */
-  def splitFilesDriverPool(
-      files: Seq[Path],
-      opts: MrfOptions,
-      conf: org.apache.hadoop.conf.Configuration): Map[String, Seq[MrfInputPartition]] = {
-    val sconf = new SerializableHadoopConf(conf)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.max(1, math.min(files.size, Runtime.getRuntime.availableProcessors() / 2)))
-    var failed = false
-    try {
-      val futs = files.map { f =>
-        f.toString -> pool.submit(new java.util.concurrent.Callable[Seq[MrfInputPartition]] {
-          override def call(): Seq[MrfInputPartition] =
-            splitFileGuarded(f.toString, opts, sconf)
-        })
-      }
-      futs.map { case (p, fut) =>
-        p -> (try fut.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            // surface the real failure (malformed JSON, missing file),
-            // not the executor wrapper
-            failed = true
-            throw Option(e.getCause).getOrElse(e)
-          case e: Throwable => failed = true; throw e
-        })
-      }.toMap
-    } finally {
-      // on failure, CANCEL the queue — plain shutdown() would let the
-      // remaining files stream their full bytes through the driver for
-      // a plan that is already dead (the executor-path counterpart
-      // cancels via shutdownNow + cancelJobGroup); threads blocked in
-      // reads see the interrupt at the next chunk callback
-      if (failed) { pool.shutdownNow(); () } else pool.shutdown()
+        // spark.sql.files.ignoreCorruptFiles, and the only one an
+        // incremental emitter can honor (the stream cannot retract
+        // chunks it already appended), so every path derives the same
+        // ledger deterministically for genuinely corrupt bytes (same
+        // failure byte). Like Spark's flag, a TRANSIENT I/O error is
+        // indistinguishable from corruption here — users who cannot
+        // tolerate that ambiguity leave the flag off.
+        logWarning(s"payer-mrf: corrupt file $file — keeping $kept complete chunks", e)
     }
   }
-
-  /** Split-path selection rule, shared by the batch planner and the
-    * streaming splitter so the choice cannot drift: an executor split
-    * job pays off at ≥ 4 files or ≥ 256 MB of input; below that the
-    * driver splits.
-    */
-  def autoThreshold(count: Int, totalBytes: Long): Boolean =
-    count >= 4 || totalBytes >= (256L << 20)
 
   /** Executor-side split pass — the 100 TB path. One Spark task per
     * file runs the identical [[splitFileGuarded]] body next to the data
     * and ships back only chunk SPECS (~100 B each): split I/O scales
     * with the cluster instead of capping at the driver NIC (the
     * reference streams every byte through one driver thread,
-    * `JsonMRFSource.scala:59-180`). Each invocation gets a UNIQUE
-    * job-group id under the `payer-mrf-split` prefix — cancelling one
-    * query's splits (stream stop) must not kill another's.
+    * `JsonMRFSource.scala:59-180`). `onFile` runs on the scheduler's
+    * event thread as each task finishes, so it must be quick. Each
+    * caller passes a UNIQUE job-group id under the `payer-mrf-split`
+    * prefix — cancelling one query's splits (stream stop) must not kill
+    * another's.
     */
-  def splitFilesDistributed(
+  private def splitFilesDistributed(
       files: Seq[Path],
       opts: MrfOptions,
       conf: org.apache.hadoop.conf.Configuration,
       sc: org.apache.spark.SparkContext,
-      jobGroup: String = freshSplitJobGroup()): Map[String, Seq[MrfInputPartition]] = {
+      jobGroup: String)(onFile: (Int, Seq[MrfInputPartition]) => Unit): Unit = {
     // the context is a required parameter, never re-resolved from
-    // SparkSession.active: the streaming splitter calls this from
-    // daemon pool threads (where active can be absent or a DIFFERENT
-    // session's on a multi-session driver) and cancels via the owning
-    // context — jobs must be submitted to the context cancellation
-    // reaches
+    // SparkSession.active: the stream calls this from its splitter
+    // thread (where active can be absent or a DIFFERENT session's on a
+    // multi-session driver) and cancels via the owning context — jobs
+    // must be submitted to the context cancellation reaches
     val sconf = new SerializableHadoopConf(conf)
     val paths = files.map(_.toString)
     // save/RESTORE the caller's job group: clearJobGroup() would wipe a
@@ -499,10 +444,17 @@ object MrfFileSplitter extends org.apache.spark.internal.Logging {
     sc.setJobGroup(jobGroup,
       s"payer-mrf: split ${paths.size} file(s) on executors", interruptOnCancel = false)
     try {
-      sc.parallelize(paths, paths.size)
-        .map(p => p -> splitFileGuarded(p, opts, sconf))
-        .collect()
-        .toMap
+      sc.runJob(sc.parallelize(paths, paths.size), (it: Iterator[String]) => {
+        val out = scala.collection.mutable.ArrayBuffer.empty[MrfInputPartition]
+        it.foreach(p => splitFileGuarded(p, opts, sconf)(out += _))
+        out.toSeq
+      }, onFile)
+    } catch {
+      case e: InterruptedException =>
+        // the waiting thread was interrupted (stream stop), but the
+        // job runs on: cancel it, or the cluster keeps splitting
+        sc.cancelJobGroup(jobGroup)
+        throw e
     } finally {
       sc.setLocalProperty("spark.jobGroup.id", prevGroup)
       sc.setLocalProperty("spark.job.description", prevDesc)
@@ -513,20 +465,18 @@ object MrfFileSplitter extends org.apache.spark.internal.Logging {
   def freshSplitJobGroup(): String =
     "payer-mrf-split-" + java.util.UUID.randomUUID().toString.take(8)
 
-  /** Split one file into partitions; `ordinalBase` gives the first chunk's
-    * global ordinal. gz inputs are eagerly decompressed to a sibling file
-    * first (gz cannot be seeked — reference behavior,
-    * `JsonMRFSourceProvider.scala:38-46`).
+  /** Split one file into partitions numbered from 0. gz inputs are
+    * eagerly decompressed to a sibling file first (gz cannot be seeked —
+    * reference behavior, `JsonMRFSourceProvider.scala:38-46`).
     */
   def splitFile(
       file: Path,
       opts: MrfOptions,
-      conf: org.apache.hadoop.conf.Configuration,
-      ordinalBase: Long)(onPartition: MrfInputPartition => Unit): Long = {
+      conf: org.apache.hadoop.conf.Configuration)(onPartition: MrfInputPartition => Unit): Unit = {
     val dataPath = Gunzip.decompressIfNeeded(file, conf)
     val fs = rawFs(dataPath, conf)
     val name = dataPath.getName
-    var ordinal = ordinalBase
+    var ordinal = 0L
     val in = new BufferedInputStream(fs.open(dataPath), opts.bufferSize)
     try {
       new JsonSplitter(in, opts.splitterOptions).run {
@@ -540,6 +490,5 @@ object MrfFileSplitter extends org.apache.spark.internal.Logging {
           ordinal += 1
       }
     } finally in.close()
-    ordinal
   }
 }

@@ -134,9 +134,10 @@ final class MrfScan(
 }
 
 /** Batch scan: split every input file up front, one task per chunk.
-  * Files are split in parallel (one splitter per file — the per-file scan
-  * is inherently sequential, the fleet of files is not); chunks failing a
-  * pushed header_key filter are dropped before scheduling.
+  * Several files split in parallel, one executor task per file (the
+  * per-file scan is inherently sequential, the fleet of files is not);
+  * chunks failing a pushed header_key filter are dropped before
+  * scheduling.
   */
 final class MrfBatch(
     opts: MrfOptions,
@@ -155,9 +156,8 @@ final class MrfBatch(
       fileNames.forall(names => names.contains(n) ||
         Gunzip.decompressedName(n).exists(names.contains))
     }
-    // split on executors or the driver pool, chosen by the listing's
-    // size (the executor pass returns ~100 B chunk specs, never file
-    // bytes)
+    // one file splits on the driver, several on executors (the
+    // executor pass returns ~100 B chunk specs, never file bytes)
     MrfSplitCache.getOrSplitAll(files, opts, conf, sc)
       .filter(p => headerKeys.forall(_.contains(p.headerKey)))
       .zipWithIndex

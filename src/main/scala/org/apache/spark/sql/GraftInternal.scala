@@ -3,6 +3,7 @@ package org.apache.spark.sql
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.classic.{Dataset => ClassicDataset, SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
@@ -40,17 +41,20 @@ object GraftInternal {
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
   /** The checkpointed `rdd` as a DataFrame whose leaf DECLARES
-    * `partitioning`. Caller must guarantee the rows are physically
-    * laid out that way — this only changes what the planner is told.
+    * `partitioning` and carries the checkpoint's own `stats` (without
+    * them the leaf plans at the default 8 EiB size and never
+    * broadcasts). Caller must guarantee the rows are physically laid
+    * out that way — this only changes what the planner is told.
     */
   def rddWithPartitioning(
       spark: SparkSession,
       output: Seq[Attribute],
       rdd: RDD[InternalRow],
-      partitioning: Partitioning): DataFrame = {
+      partitioning: Partitioning,
+      stats: Statistics): DataFrame = {
     val cs = spark.asInstanceOf[ClassicSparkSession]
     ClassicDataset.ofRows(
       cs,
-      LogicalRDD(output, rdd, partitioning, Nil, false, None)(cs))
+      LogicalRDD(output, rdd, partitioning, Nil, false, None)(cs, Some(stats)))
   }
 }

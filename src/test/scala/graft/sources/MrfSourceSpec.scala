@@ -17,18 +17,39 @@ class MrfSourceSpec extends SparkTestBase {
 
   private lazy val ffsPath = MrfFixtures.writeTemp("ffs.json", MrfFixtures.ffs).getAbsolutePath
 
-  /** A fresh directory holding the four fixture files — the smallest
-    * fleet that takes the executor split path.
-    */
-  private def fleetDir(prefix: String): java.io.File = {
+  /** A fresh directory holding the first `n` of the four fixture files. */
+  private def fixtureDir(prefix: String, n: Int): java.io.File = {
     val dir = Files.createTempDirectory(prefix).toFile
     Seq("a_ffs.json" -> MrfFixtures.ffs, "b_bundle.json" -> MrfFixtures.bundle,
       "c_cap.json" -> MrfFixtures.capitation, "d_multi.json" -> MrfFixtures.multiPlan)
+      .take(n)
       .foreach { case (name, json) =>
         Files.write(new java.io.File(dir, name).toPath, json.getBytes("UTF-8"))
       }
     dir
   }
+
+  /** A fresh directory holding all four fixture files. */
+  private def fleetDir(prefix: String): java.io.File = fixtureDir(prefix, 4)
+
+  /** Run an AvailableNow stream of `dir` into the noop sink to its end. */
+  private def drainStream(dir: java.io.File, options: (String, String)*): Unit = {
+    val q = spark.readStream.format("payer-mrf").options(options.toMap)
+      .load(dir.getAbsolutePath)
+      .writeStream.format("noop")
+      .option("checkpointLocation", Files.createTempDirectory("mrf-ckpt-drain").toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    assert(q.awaitTermination(60000), "stream did not terminate")
+  }
+
+  /** Options that read through [[MrfSpecFs]] instead of the local FS. */
+  private val specFs = Seq(
+    "hadoop.fs.file.impl" -> classOf[MrfSpecFs].getName,
+    "hadoop.fs.file.impl.disable.cache" -> "true")
+
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
 
   /** Task counts of the `payer-mrf-split` executor jobs `body` submits,
     * one entry per job. A marker job run after `body` flushes the
@@ -365,9 +386,8 @@ class MrfSourceSpec extends SparkTestBase {
       .option("ignoreCorruptFiles", "true").load(dir.getAbsolutePath)
     assert(df.select("file_name").distinct().collect().map(_.getString(0)).toSet == Set("good.json"))
     assert(df.filter($"header_key" === "in_network").count() > 0)
-    // the executor split path applies the same corrupt-file policy: a
-    // 4-file directory takes it (the 2-file one above took the driver
-    // pool), and each read splits in one 4-task job
+    // a 4-file directory applies the same corrupt-file policy, each
+    // read splitting in one 4-task executor job
     val fleet = Files.createTempDirectory("mrf-corrupt-fleet").toFile
     Files.write(new java.io.File(fleet, "good.json").toPath, MrfFixtures.ffs.getBytes("UTF-8"))
     Seq("bad_a.json", "bad_b.json", "bad_c.json").foreach { n =>
@@ -423,22 +443,25 @@ class MrfSourceSpec extends SparkTestBase {
   }
 
   test("a 1-file stream splits on the driver; a 4-file stream submits split jobs") {
-    def stream(dir: java.io.File): Unit = {
-      val q = spark.readStream.format("payer-mrf").option("chunkBytes", "4111")
-        .load(dir.getAbsolutePath)
-        .writeStream.format("noop")
-        .option("checkpointLocation", Files.createTempDirectory("mrf-ckpt-rule").toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      assert(q.awaitTermination(60000), "stream did not terminate")
-    }
     val one = Files.createTempDirectory("mrf-rule-1").toFile
     Files.write(new java.io.File(one, "a_ffs.json").toPath, MrfFixtures.ffs.getBytes("UTF-8"))
-    val oneTasks = splitJobTasks(stream(one))
+    val oneTasks = splitJobTasks(drainStream(one, "chunkBytes" -> "4111"))
     assert(oneTasks.isEmpty, s"a 1-file stream must keep the driver scan, saw $oneTasks")
-    // the streaming executor path runs one 1-task job per file
-    val fourTasks = splitJobTasks(stream(fleetDir("mrf-rule-4")))
-    assert(fourTasks == List(1, 1, 1, 1), s"expected four 1-task split jobs, saw $fourTasks")
+    // the streaming executor path runs one job with one task per file
+    val fourTasks = splitJobTasks(drainStream(fleetDir("mrf-rule-4"), "chunkBytes" -> "4111"))
+    assert(fourTasks == List(4), s"expected one 4-task split job, saw $fourTasks")
+  }
+
+  test("one listed file splits on the driver, two or more in one executor job, batch and stream alike") {
+    for ((n, expected) <- Seq(1 -> Nil, 2 -> List(2), 4 -> List(4))) {
+      val batch = splitJobTasks {
+        spark.read.format("payer-mrf").option("chunkBytes", "4113")
+          .load(fixtureDir(s"mrf-rule-b$n", n).getAbsolutePath).count()
+      }
+      assert(batch == expected, s"$n-file batch read: expected $expected, saw $batch")
+      val stream = splitJobTasks(drainStream(fixtureDir(s"mrf-rule-s$n", n), "chunkBytes" -> "4113"))
+      assert(stream == expected, s"$n-file stream: expected $expected, saw $stream")
+    }
   }
 
   test("a completed 4-file AvailableNow stream cancels no finished split job group") {
@@ -457,16 +480,8 @@ class MrfSourceSpec extends SparkTestBase {
     def cancelWarns(group: String): Int =
       warns.asScala.count(m => m.contains("Failed to cancel job group") && m.contains(group))
     try {
-      val splits = splitJobTasks {
-        val q = spark.readStream.format("payer-mrf").option("chunkBytes", "4111")
-          .load(fleetDir("mrf-cancel").getAbsolutePath)
-          .writeStream.format("noop")
-          .option("checkpointLocation", Files.createTempDirectory("mrf-ckpt-cancel").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        assert(q.awaitTermination(60000), "stream did not terminate")
-      }
-      assert(splits == List(1, 1, 1, 1), s"expected four 1-task split jobs, saw $splits")
+      val splits = splitJobTasks(drainStream(fleetDir("mrf-cancel"), "chunkBytes" -> "4111"))
+      assert(splits == List(4), s"expected one 4-task split job, saw $splits")
       // the source stops before awaitTermination returns, and the
       // scheduler handles its events in order: the marker job that
       // splitJobTasks ran after the stream came after any cancel
@@ -604,6 +619,98 @@ class MrfSourceSpec extends SparkTestBase {
     assert(payloads.exists(_.contains("\"a\"")) && payloads.exists(_.contains("\"b\"")),
       s"expected the two complete elements, got $payloads")
     assert(!payloads.exists(_.contains("\"c\"")))
+    // a 1-file stream splits on the driver chunk by chunk, through the
+    // same guarded body: it delivers exactly the chunks the batch keeps
+    val q = spark.readStream.format("payer-mrf")
+      .option("ignoreCorruptFiles", "true")
+      .option("chunkBytes", "1").option("maxElements", "1")
+      .load(dir.getAbsolutePath)
+      .writeStream.format("memory").queryName("mrf_prefix_out")
+      .option("checkpointLocation", Files.createTempDirectory("mrf-ckpt-prefix").toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    assert(q.awaitTermination(60000), "stream did not terminate")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("file_name", "header_key", "json_payload").collect().map(_.toSeq.toString).sorted.toSeq
+    assert(rows(spark.table("mrf_prefix_out")) == rows(df))
+  }
+
+  test("a file deleted after listing fails the batch read and the stream under ignoreCorruptFiles") {
+    // MrfSpecFs deletes a `vanish` file when the splitter opens it; a
+    // missing file is not a corrupt one, on the driver (1 file) and on
+    // executors (2 files)
+    for (n <- Seq(1, 2)) {
+      def dir(): java.io.File = {
+        val d = fixtureDir(s"mrf-vanish-$n", n - 1)
+        Files.write(new java.io.File(d, "x_vanish.json").toPath, MrfFixtures.ffs.getBytes("UTF-8"))
+        d
+      }
+      val opts = specFs :+ ("ignoreCorruptFiles" -> "true")
+      val batch = intercept[Exception] {
+        spark.read.format("payer-mrf").options(opts.toMap).load(dir().getAbsolutePath).count()
+      }
+      assert(causes(batch).exists(_.isInstanceOf[java.io.FileNotFoundException]) ||
+        String.valueOf(batch.getMessage).contains("FileNotFoundException"),
+        s"$n-file batch read: $batch")
+      val stream = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        drainStream(dir(), opts: _*)
+      }
+      assert(causes(stream).exists(_.isInstanceOf[java.io.FileNotFoundException]) ||
+        String.valueOf(stream.getMessage).contains("FileNotFoundException"),
+        s"$n-file stream: $stream")
+    }
+  }
+
+  test("stop() ends a running split on the driver and on executors") {
+    import org.apache.spark.JobExecutionStatus
+    val sc = spark.sparkContext
+    // 16k one-element chunks read 64 bytes per 10 ms: about half a
+    // minute per file unless stop() ends the split
+    val slowJson = (1 to 16000).map(i => s"""{"i":$i}""").mkString("""{"in_network":[""", ",", "]}")
+    def splitters: Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.filter(_.getName == "payer-mrf-splitter").toSet
+    for (n <- Seq(1, 4)) {
+      val dir = Files.createTempDirectory(s"mrf-stop-$n").toFile
+      (1 to n).foreach { i =>
+        Files.write(new java.io.File(dir, s"f${i}_slow.json").toPath, slowJson.getBytes("UTF-8"))
+      }
+      val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          Option(js.properties).map(_.getProperty("spark.jobGroup.id"))
+            .filter(g => g != null && g.startsWith("payer-mrf-split")).foreach(groups.add)
+      }
+      sc.addSparkListener(listener)
+      try {
+        val before = splitters
+        val options = (Seq("path" -> dir.getAbsolutePath, "chunkBytes" -> "4096",
+          "maxElements" -> "1") ++ specFs).toMap
+        val map = new org.apache.spark.sql.util.CaseInsensitiveStringMap(options.asJava)
+        val stream = new MrfTable(MrfOptions(map), map).newScanBuilder(map)
+          .build().asInstanceOf[MrfScan]
+          .toMicroBatchStream(Files.createTempDirectory("mrf-ckpt-stop").toString)
+          .asInstanceOf[MrfMicroBatchStream]
+        val mine = splitters -- before
+        assert(mine.size == 1, s"expected one new splitter thread, saw $mine")
+        def awaitTrue(what: String, seconds: Int)(cond: => Boolean): Unit = {
+          val deadline = System.nanoTime() + seconds * 1000000000L
+          while (!cond && System.nanoTime() < deadline) Thread.sleep(50)
+          assert(cond, s"$n file(s): $what within $seconds s")
+        }
+        // mid-split: the driver has emitted chunks, or a split job runs
+        if (n == 1) awaitTrue("first chunk", 30)(stream.ledgerState._2 > 0)
+        else awaitTrue("split job start", 30)(!groups.isEmpty)
+        assert(mine.forall(_.isAlive), "the split finished before stop()")
+        stream.stop()
+        def running(g: String): Boolean = sc.statusTracker.getJobIdsForGroup(g)
+          .exists(id => sc.statusTracker.getJobInfo(id).exists(_.status == JobExecutionStatus.RUNNING))
+        awaitTrue("splitter exit, split jobs ended, split tasks ended", 10) {
+          mine.forall(!_.isAlive) && !groups.asScala.exists(running) &&
+            sc.statusTracker.getExecutorInfos.map(_.numRunningTasks).sum == 0
+        }
+        if (n == 1) assert(groups.isEmpty, s"a 1-file split submitted jobs: $groups")
+      } finally sc.removeSparkListener(listener)
+    }
   }
 
   test("a user-supplied schema must match the source schema exactly") {
@@ -879,5 +986,37 @@ class MrfSourceSpec extends SparkTestBase {
     val ok = spark.read.format("payer-mrf")
       .option("maxResidueBytes", 1 << 20).load(dir.getAbsolutePath).count()
     assert(ok > 0)
+  }
+}
+
+/** Local filesystem for the split-path specs, chosen per read with the
+  * `hadoop.fs.file.impl` option: a file whose name contains `slow`
+  * reads at most 64 bytes per 10 ms call (a split still running when
+  * the spec acts on it), and one whose name contains `vanish` is deleted
+  * as it is opened (a file deleted after listing).
+  */
+class MrfSpecFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import org.apache.hadoop.fs.{FSDataInputStream, FSInputStream, Path}
+
+  override def open(f: Path, bufferSize: Int): FSDataInputStream = {
+    if (f.getName.contains("vanish")) delete(f, false)
+    val in = super.open(f, bufferSize)
+    if (!f.getName.contains("slow")) in
+    else new FSDataInputStream(new FSInputStream {
+      private def pause(): Unit =
+        try Thread.sleep(10)
+        catch {
+          case _: InterruptedException =>
+            throw new java.io.InterruptedIOException("slow read interrupted")
+        }
+      override def read(): Int = { pause(); in.read() }
+      override def read(b: Array[Byte], off: Int, len: Int): Int = {
+        pause(); in.read(b, off, math.min(len, 64))
+      }
+      override def seek(pos: Long): Unit = in.seek(pos)
+      override def getPos: Long = in.getPos
+      override def seekToNewSource(target: Long): Boolean = false
+      override def close(): Unit = in.close()
+    })
   }
 }
