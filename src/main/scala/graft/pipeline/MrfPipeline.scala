@@ -75,15 +75,9 @@ object MrfPipeline {
   }
 
   /** Silver: provider_references_x_payer — one row per (group id, inline
-    * group), header entity columns attached (`01_payer_mrf_demo.py:
-    * 148-159`). Remote `location` variants keep a row with null npi/tin.
-    */
-  def providerReferencesXPayer(bronze: DataFrame): DataFrame =
-    providerReferencesXPayer(bronze, header(bronze))
-
-  /** [[providerReferencesXPayer]] reusing an already-built [[header]]
-    * frame — `silver()` passes its own, so one silver star plans one
-    * header scan branch, not two.
+    * group), header entity columns attached from `hdr`, a [[header]]
+    * frame of the same bronze (`01_payer_mrf_demo.py:148-159`). Remote
+    * `location` variants keep a row with null npi/tin.
     */
   def providerReferencesXPayer(bronze: DataFrame, hdr: DataFrame): DataFrame = {
     val refs = items(bronze, "provider_references", MrfSchema.providerReference)
@@ -135,9 +129,10 @@ object MrfPipeline {
         col("item.negotiated_rates").as("negotiated_rates"),
         col("item.bundled_codes").as("bundled_codes"))
       // byte-identical duplicate items collapse to ONE row (see
-      // [[skInNetwork]]); on this lazy frame the exchange this costs
-      // doubles as the co-partitioning on sk_in_network_id that joins
-      // among its derived frames reuse ([[silver]] materializes it)
+      // [[skInNetwork]]); on this lazy frame, joins among its derived
+      // frames can reuse the dedup's hash partitioning on
+      // sk_in_network_id. [[silver]]'s checkpoint of it does not keep
+      // that partitioning (see its scaladoc)
       .dropDuplicates("sk_in_network_id")
 
   /** Silver: in_network_rates — one row per negotiated_rates element
@@ -212,72 +207,39 @@ object MrfPipeline {
     * (`01_payer_mrf_demo.py:223-238`): for a billing code and a provider
     * TIN, every negotiated FFS price with the provider group's NPIs.
     *
-    * Join strategy at scale: codes/prices/par_providers co-partition on
-    * the surrogate keys they join on; the provider side is filtered to
-    * one TIN before joining, so Catalyst broadcasts it.
-    */
-  /** The FFS code slice both gold variants start from — ONE definition,
-    * so the reference-resolved and inline-group branches cannot drift
-    * on the filter or the carried columns.
-    */
-  private def ffsProc(codes: DataFrame, billingCode: String): DataFrame =
-    codes
-      .filter(col("billing_code") === billingCode &&
-        col("negotiation_arrangement") === "ffs")
-      .select("sk_in_network_id", "file_name", "billing_code", "billing_code_type", "name")
-
-  /** The gold 12-column projection shared by both variants; only the
-    * provider_group_id expression differs (real column vs typed null).
-    */
-  private def goldColumns(providerGroupId: Column): Seq[Column] = Seq(
-    col("file_name"), col("reporting_entity_name"), col("billing_code"),
-    col("billing_code_type"), col("name"), col("negotiated_rate"),
-    col("billing_class"), col("service_code"), col("expiration_date"),
-    providerGroupId.as("provider_group_id"), col("npi"), col("tin"))
-
-  def shoppablePrices(
-      codes: DataFrame,
-      prices: DataFrame,
-      parProviders: DataFrame,
-      providersXPayer: DataFrame,
-      billingCode: String,
-      tinValue: String): DataFrame = {
-    val proc = ffsProc(codes, billingCode)
-    val prov = providersXPayer
-      .filter(col("tin.value") === tinValue)
-      .select(
-        col("file_name").as("p_file_name"), col("provider_group_id"),
-        col("npi"), col("tin"), col("reporting_entity_name"))
-    proc
-      .join(prices.drop("file_name"), "sk_in_network_id")
-      .join(parProviders.select("sk_rate_id", "provider_reference_id"), "sk_rate_id")
-      .join(
-        broadcast(prov),
-        col("provider_reference_id") === col("provider_group_id") &&
-          col("file_name") === col("p_file_name"))
-      .select(goldColumns(col("provider_group_id")): _*)
-  }
-
-  /** Gold over a full [[Silver]] bundle: BOTH provider variants —
-    * group-id references resolved through provider_references_x_payer,
-    * AND inline per-rate provider_groups (provider_group_id is null on
-    * those rows; entity attribution comes from the header by file).
+    * One plan covers both provider variants: the FFS price slice joins
+    * on `sk_rate_id` to the union of group-id references resolved
+    * through provider_references_x_payer (within the rate's own file)
+    * and inline per-rate provider_groups (provider_group_id null). Both
+    * sides are filtered to one TIN, so the union is broadcast.
+    * `reporting_entity_name` comes from the header by file.
     */
   def shoppablePrices(s: Silver, billingCode: String, tinValue: String): DataFrame = {
-    val viaRefs = shoppablePrices(
-      s.codes, s.prices, s.parProviders, s.providersXPayer, billingCode, tinValue)
+    val atTin = col("tin.value") === tinValue
+    val viaRefs = s.parProviders
+      .join(
+        s.providersXPayer.filter(atTin)
+          .select(col("file_name").as("p_file_name"), col("provider_group_id"),
+            col("npi"), col("tin")),
+        col("provider_reference_id") === col("provider_group_id") &&
+          col("file_name") === col("p_file_name"))
+      .select("sk_rate_id", "provider_group_id", "npi", "tin")
+    val inline = s.rateProviderGroups.filter(atTin)
+      .select(col("sk_rate_id"), lit(null).cast("long").as("provider_group_id"),
+        col("npi"), col("tin"))
     val h = s.header
       .select(col("file_name").as("h_file_name"), col("reporting_entity_name"))
-    val inline = ffsProc(s.codes, billingCode)
+    s.codes
+      .filter(col("billing_code") === billingCode &&
+        col("negotiation_arrangement") === "ffs")
       .join(s.prices.drop("file_name"), "sk_in_network_id")
-      .join(
-        s.rateProviderGroups
-          .filter(col("tin.value") === tinValue)
-          .select(col("sk_rate_id"), col("npi"), col("tin")),
-        "sk_rate_id")
+      .join(broadcast(viaRefs.unionByName(inline)), "sk_rate_id")
       .join(broadcast(h), col("file_name") === col("h_file_name"), "left")
-      .select(goldColumns(lit(null).cast("long")): _*)
-    viaRefs.unionByName(inline)
+      .select(
+        col("file_name"), col("reporting_entity_name"), col("billing_code"),
+        col("billing_code_type"), col("name"), col("negotiated_rate"),
+        col("billing_class"), col("service_code"), col("expiration_date"),
+        col("provider_group_id"), col("npi"), col("tin"))
   }
 
   /** All eight silver tables of one bronze frame (see [[silver]]). */

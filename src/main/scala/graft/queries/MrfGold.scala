@@ -183,10 +183,9 @@ object MrfGold {
   private def q43(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val sv = MrfPipeline.silver(stagedBronze(s, d, "q43_mrf"))
-    // the Silver-bundle overload: BOTH provider variants (the staged
-    // document only uses group-id references, so the inline branch
-    // contributes zero rows — but the union plan is what runs under
-    // the oracle)
+    // BOTH provider variants (the staged document only uses group-id
+    // references, so the inline side contributes zero rows — but the
+    // union plan is what runs under the oracle)
     MrfPipeline.shoppablePrices(sv, billingCode = "7", tinValue = "TIN-8")
       .select(
         $"file_name", $"reporting_entity_name", $"billing_code",

@@ -35,8 +35,19 @@ final class MrfTable(opts: MrfOptions, userOptions: CaseInsensitiveStringMap)
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new MrfScanBuilder(opts, options, owner)
+  /** Scans read the table's own options overlaid with the scan-time
+    * `options`, so a caller that builds with another map keeps the
+    * table's `hadoop.*` overrides; a scan-time key replaces the table's
+    * key of any case.
+    */
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    val merged = new util.HashMap[String, String](userOptions.asCaseSensitiveMap())
+    options.asCaseSensitiveMap().forEach { (k, v) =>
+      merged.keySet.removeIf(_.equalsIgnoreCase(k))
+      merged.put(k, v)
+    }
+    new MrfScanBuilder(opts, new CaseInsensitiveStringMap(merged), owner)
+  }
 }
 
 /** Scan builder with the two pushdowns that matter for this source:

@@ -31,7 +31,7 @@ class MrfPipelineSpec extends SparkTestBase {
 
   test("providers silver: group rows with npi/tin + location variant") {
     import spark.implicits._
-    val p = MrfPipeline.providerReferencesXPayer(bronze)
+    val p = MrfPipeline.providerReferencesXPayer(bronze, MrfPipeline.header(bronze))
     assert(p.count() == 3) // 2 inline groups + 1 location-only
     val g100 = p.filter($"provider_group_id" === 100).first()
     assert(g100.getSeq[Long](g100.fieldIndex("npi")) == Seq(1111111111L, 2222222222L))
@@ -138,17 +138,13 @@ class MrfPipelineSpec extends SparkTestBase {
     val s = MrfPipeline.silver(dupBronze)
     assert(s.codes.filter($"billing_code" === "27447").count() == 1,
       "duplicate item must collapse to one code row")
-    val gold = MrfPipeline.shoppablePrices(
-      s.codes, s.prices, s.parProviders, s.providersXPayer,
-      billingCode = "27447", tinValue = "11-1111111")
+    val gold = MrfPipeline.shoppablePrices(s, billingCode = "27447", tinValue = "11-1111111")
     assert(gold.count() == 1, s"duplicate item multiplied gold rows: ${gold.count()}")
   }
 
   test("gold shoppable prices: knee replacement at TIN 11-1111111 = 123.45") {
     val s = MrfPipeline.silver(bronze)
-    val gold = MrfPipeline.shoppablePrices(
-      s.codes, s.prices, s.parProviders, s.providersXPayer,
-      billingCode = "27447", tinValue = "11-1111111")
+    val gold = MrfPipeline.shoppablePrices(s, billingCode = "27447", tinValue = "11-1111111")
     val rows = gold.collect()
     assert(rows.length == 1)
     val r = rows.head
@@ -158,13 +154,53 @@ class MrfPipelineSpec extends SparkTestBase {
     assert(r.getAs[String]("reporting_entity_name") == "graft health")
   }
 
+  test("gold returns both provider variants of one code and TIN in one lookup") {
+    // the fixture's inline group on 27447's second rate moved to the
+    // referenced group 100's TIN: one lookup then hits both sides
+    val m = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = m.readTree(MrfFixtures.ffs)
+    root.get("in_network").get(0).get("negotiated_rates").get(1)
+      .get("provider_groups").get(0).get("tin")
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      .put("value", "11-1111111")
+    val p = MrfFixtures.writeTemp("both.json", m.writeValueAsString(root)).getAbsolutePath
+    val s = MrfPipeline.silver(spark.read.format("payer-mrf").load(p))
+    val rows = MrfPipeline.shoppablePrices(s, "27447", "11-1111111").collect()
+    val got = rows.map { r =>
+      val g = r.fieldIndex("provider_group_id")
+      (r.getAs[Double]("negotiated_rate"), if (r.isNullAt(g)) None else Some(r.getLong(g)))
+    }.toSeq.sortBy(_._1)
+    assert(got == Seq(123.45 -> Some(100L), 321.99 -> None), rows.toSeq)
+    assert(rows.forall(_.getAs[String]("reporting_entity_name") == "graft health"), rows.toSeq)
+  }
+
+  test("gold reads each silver table it needs once per lookup") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val dir = java.nio.file.Files.createTempDirectory("mrf-gold-silver")
+    val s = MrfPipeline.silver(bronze)
+    val tables = Seq(
+      "header" -> s.header, "providers_x_payer" -> s.providersXPayer, "codes" -> s.codes,
+      "rates" -> s.rates, "prices" -> s.prices, "par_providers" -> s.parProviders,
+      "rate_provider_groups" -> s.rateProviderGroups, "bundled_codes" -> s.bundledCodes)
+    tables.foreach { case (n, df) => df.write.parquet(dir.resolve(n).toString) }
+    def t(n: String) = spark.read.parquet(dir.resolve(n).toString)
+    val read = MrfPipeline.Silver(t("header"), t("providers_x_payer"), t("codes"), t("rates"),
+      t("prices"), t("par_providers"), t("rate_provider_groups"), t("bundled_codes"))
+    val gold = MrfPipeline.shoppablePrices(read, "27447", "11-1111111")
+    val plan = gold.queryExecution.optimizedPlan
+    val scanned = plan.collect { case lr: LogicalRelation => lr.relation }
+      .flatMap { case h: HadoopFsRelation => h.location.rootPaths.map(_.getName) }.sorted
+    assert(scanned == Seq("codes", "header", "par_providers", "prices",
+      "providers_x_payer", "rate_provider_groups"), plan)
+    assert(gold.collect().map(_.getAs[Double]("negotiated_rate")).toSeq == Seq(123.45))
+  }
+
   test("pipeline works identically on perElement bronze") {
     val p = MrfFixtures.writeTemp("ffs.json", MrfFixtures.ffs).getAbsolutePath
     val perEl = spark.read.format("payer-mrf").option("perElement", "true").load(p)
     val s = MrfPipeline.silver(perEl)
     assert(s.codes.count() == 2 && s.prices.count() == 3)
-    val gold = MrfPipeline.shoppablePrices(
-      s.codes, s.prices, s.parProviders, s.providersXPayer, "27447", "11-1111111")
+    val gold = MrfPipeline.shoppablePrices(s, "27447", "11-1111111")
     assert(gold.collect().head.getAs[Double]("negotiated_rate") == 123.45)
   }
 
@@ -203,15 +239,15 @@ class MrfPipelineSpec extends SparkTestBase {
     assert(s.rateProviderGroups.count() == 1)
     val g = s.rateProviderGroups.first()
     assert(g.getAs[org.apache.spark.sql.Row]("tin").getAs[String]("value") == "55-5555555")
-    // ...and reaches gold via the Silver-bundle overload (it used to
-    // vanish: the refs-only join path sees no provider rows at all)
+    // ...and reaches gold (a join through provider references alone
+    // sees no provider rows for it)
     val gold = MrfPipeline.shoppablePrices(s, billingCode = "71045", tinValue = "55-5555555")
     val rows = gold.collect()
     assert(rows.length == 1, s"inline-group price missing from gold: ${rows.toSeq}")
     assert(rows.head.getAs[Double]("negotiated_rate") == 55.0)
     assert(rows.head.getAs[String]("reporting_entity_name") == "graft multi")
     assert(rows.head.isNullAt(rows.head.fieldIndex("provider_group_id")))
-    // a refs-variant file through the same overload is unchanged
+    // a refs-variant file through the same lookup is unchanged
     val ffsBronzeS = MrfPipeline.silver(
       spark.read.format("payer-mrf")
         .load(MrfFixtures.writeTemp("ffs.json", MrfFixtures.ffs).getAbsolutePath))

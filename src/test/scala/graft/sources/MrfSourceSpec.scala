@@ -810,6 +810,24 @@ class MrfSourceSpec extends SparkTestBase {
     } finally prevActive.foreach(SparkSession.setActiveSession)
   }
 
+  test("a scan keeps the table's hadoop overrides under other scan-time options") {
+    val table = new MrfTable(
+      MrfOptions(new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        java.util.Map.of("path", ffsPath))),
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+        (Seq("path" -> ffsPath, "hadoop.graft.probe" -> "table") ++ specFs).toMap.asJava))
+    val conf = table.newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty())
+      .build().asInstanceOf[MrfScan].hadoopConf()
+    val fs = new org.apache.hadoop.fs.Path(ffsPath).getFileSystem(conf)
+    assert(fs.isInstanceOf[MrfSpecFs], s"scan resolved ${fs.getClass.getName}")
+    assert(conf.get("graft.probe") == "table")
+    // a scan-time key wins over the table's
+    val scanTime = new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+      java.util.Map.of("hadoop.graft.probe", "scan"))
+    val overridden = table.newScanBuilder(scanTime).build().asInstanceOf[MrfScan].hadoopConf()
+    assert(overridden.get("graft.probe") == "scan")
+  }
+
   test("micro-batch stream works from a thread with NO active or default session") {
     import org.apache.spark.sql.SparkSession
     val prevActive = SparkSession.getActiveSession
