@@ -1,10 +1,11 @@
 package graft.pipeline
 
+import graft.sources.MrfElements
 import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** Bronze → silver → gold transforms over payer-mrf bronze rows,
   * re-expressing the reference's notebook ETL (`/root/reference/
@@ -12,10 +13,11 @@ import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
   * library functions.
   *
   * Differences by design:
-  *  - explicit [[MrfSchema]] `from_json` instead of two-pass RDD
+  *  - an explicit [[MrfSchema]] parse instead of two-pass RDD
   *    inference (single-pass; see MrfSchema scaladoc);
-  *  - DETERMINISTIC surrogate keys (`xxhash64` of natural keys +
-  *    position) instead of `uuid()` (`01_payer_mrf_demo.py:165,180`) —
+  *  - DETERMINISTIC surrogate keys (`xxhash64` of an item's file and
+  *    raw bytes, of a rate's parent key and position) instead of
+  *    `uuid()` (`01_payer_mrf_demo.py:165,180`) —
   *    nondeterministic keys break retries (a re-executed task mints new
   *    keys, corrupting downstream joins at scale), golden tests, and
   *    incremental rebuilds;
@@ -24,55 +26,44 @@ import org.apache.spark.sql.types.{ArrayType, StringType, StructType}
   *    reference processes one file at a time; its `1=1` join at
   *    `:157-158` would cross-contaminate).
   *
-  * All transforms work on any of the source's three output shapes
-  * (chunk text, `payloadAsArray`, `perElement`).
+  * Every transform reads bronze through one element path, [[items]],
+  * so the source's three output shapes (chunk text, `payloadAsArray`,
+  * `perElement`) give the same silver rows, surrogate keys included.
   */
 object MrfPipeline {
 
-  /** One row per element of the given top-level array, with the element
-    * parsed into `col("item")` using `schema`, `file_name` retained.
-    * Unparseable payloads DROP in every input shape (the chunk path's
-    * explode(null) did this implicitly; the per-element and array paths
-    * filter explicitly) — a corrupt element must not flow into silver
-    * as an all-null row with a degenerate surrogate key.
+  /** One row per element of the given top-level array: `file_name`,
+    * the element's raw JSON text `el`, and `el` parsed into `item` using
+    * `schema`. The payload's shape is read once, from the bronze schema:
+    * an array payload (`payloadAsArray`) already holds the element
+    * texts; a string payload (chunk text or `perElement`) is cut into
+    * them by [[graft.sources.MrfElements]]. Each element is then parsed
+    * on its own, once: the parse sits inside the generator, so the drop
+    * filter below reads its result instead of being pushed under it as
+    * one more parse per field.
+    *
+    * Drop rule: an element whose parse yields no field at all — the
+    * all-null struct a PERMISSIVE parse returns for a syntax error, a
+    * truncation or `{}` — is dropped, alone; its neighbours in the same
+    * chunk stay. An element that parses with some fields null (a value
+    * of the wrong type) is kept with those nulls.
     */
   def items(bronze: DataFrame, headerKey: String, schema: StructType): DataFrame = {
-    val payloadIsArray = bronze.schema("json_payload").dataType
-      .isInstanceOf[ArrayType]
-    val base = bronze.filter(col("header_key") === headerKey)
-    val parsed =
-      if (payloadIsArray) {
-        // payloadAsArray: one JSON object string per element — explode
-        // first, then parse (a generator cannot nest inside from_json)
-        base.select(col("file_name"), explode(col("json_payload")).as("el"))
-          .select(col("file_name"), from_json(col("el"), schema).as("item"))
-      } else {
-        // chunk text "[…]" OR perElement object text — branch per row;
-        // only one parse executes per row under codegen
-        base.select(
-          col("file_name"),
-          explode(
-            when(
-              startswith(col("json_payload"), lit("[")),
-              from_json(col("json_payload"), ArrayType(schema)))
-              .otherwise(array(from_json(col("json_payload"), schema))))
-            .as("item"))
-      }
-    parsed.filter(col("item").isNotNull)
+    val payload = col("json_payload")
+    val elements =
+      if (bronze.schema("json_payload").dataType.isInstanceOf[ArrayType]) payload
+      else MrfElements(payload)
+    bronze.filter(col("header_key") === headerKey)
+      .select(col("file_name"), inline(transform(elements, el =>
+        struct(el.as("el"), from_json(el, schema).as("item")))))
+      .filter(schema.fieldNames.map(f => col("item")(f).isNotNull).reduce(_ || _))
   }
 
   /** Silver: one row per source file with the header scalars
     * (`:148-159`'s header side, keyed by file for multi-file safety).
     */
-  def header(bronze: DataFrame): DataFrame = {
-    val payload =
-      if (bronze.schema("json_payload").dataType.isInstanceOf[ArrayType])
-        element_at(col("json_payload"), 1)
-      else col("json_payload")
-    bronze.filter(col("header_key") === "")
-      .select(col("file_name"), from_json(payload, MrfSchema.header).as("h"))
-      .select(col("file_name"), col("h.*"))
-  }
+  def header(bronze: DataFrame): DataFrame =
+    items(bronze, "", MrfSchema.header).select(col("file_name"), col("item.*"))
 
   /** Silver: provider_references_x_payer — one row per (group id, inline
     * group), header entity columns attached from `hdr`, a [[header]]
@@ -95,25 +86,25 @@ object MrfPipeline {
     refs.join(broadcast(h), Seq("file_name"), "left")
   }
 
-  /** Deterministic surrogate key for one in_network item: natural keys
-    * PLUS a hash of the full item content. Real MRFs repeat a billing
-    * code (same arrangement/type/version/code/name, different rates) —
-    * natural keys alone would give both items one key and cross-link
-    * their rates/prices/providers downstream. Byte-identical duplicate
-    * items still share a key and are DEDUPLICATED in [[inNetworkCodes]]
-    * (they carry zero additional information, and left in, the
-    * rates × prices × providers join chain would multiply their gold
-    * rows combinatorially — 8× per duplicated item, not 2×).
+  /** Deterministic surrogate key for one in_network item: a hash of its
+    * file and its raw element bytes (`el` of [[items]]). Real MRFs
+    * repeat a billing code (same arrangement/type/version/code/name,
+    * different rates) — natural keys alone would give both items one key
+    * and cross-link their rates/prices/providers downstream. Only
+    * byte-identical duplicate items share a key; they are DEDUPLICATED
+    * in [[inNetworkCodes]] (they carry zero additional information, and
+    * left in, the rates × prices × providers join chain would multiply
+    * their gold rows combinatorially — 8× per duplicated item, not 2×).
+    * Items that differ in whitespace or in fields outside [[MrfSchema]]
+    * keep their own keys.
     */
-  private def skInNetwork: Column = xxhash64(
-    col("file_name"), col("item.negotiation_arrangement"),
-    col("item.billing_code_type"), col("item.billing_code_type_version"),
-    col("item.billing_code"), col("item.name"),
-    xxhash64(to_json(col("item"))))
+  private def skInNetwork: Column = xxhash64(col("file_name"), col("el"))
 
-  /** Silver: in_network_codes — one row per billing code item
-    * (`01_payer_mrf_demo.py:161-174`), carrying the nested rates for
-    * downstream normalizers.
+  /** Silver: in_network_codes — one row per distinct in_network
+    * element (`01_payer_mrf_demo.py:161-174`), carrying the nested rates
+    * for downstream normalizers. The element text `el` feeds the key
+    * only and is not a column, so [[silver]]'s checkpoint never holds
+    * raw element text.
     */
   def inNetworkCodes(bronze: DataFrame): DataFrame =
     items(bronze, "in_network", MrfSchema.inNetworkItem)
@@ -283,8 +274,8 @@ object MrfPipeline {
     * checkpoint, and `codes`, `rates`, `prices`, `parProviders`,
     * `rateProviderGroups` and `bundledCodes` are narrow projections of
     * it — writing all six reads the checkpoint blocks six times instead
-    * of re-reading bronze and re-running `from_json`, the
-    * `xxhash64(to_json(item))` key and the dedup shuffle per table.
+    * of re-reading bronze and re-running the element parse, the raw-byte
+    * key and the dedup shuffle per table.
     * `header` and `providersXPayer` stay lazy over bronze, as do the
     * standalone per-table functions above.
     *

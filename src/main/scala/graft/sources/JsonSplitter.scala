@@ -78,8 +78,9 @@ object JsonSplitter {
 
   /** Splits a chunk's payload bytes (no enclosing brackets) back into
     * per-element `[start, end)` offsets. Executor-side counterpart of the
-    * driver's chunking — used for the `payloadAsArray` output shape
-    * (reference: `JsonChunks.scala:69-83`). Pure, in-memory, O(n).
+    * driver's chunking — used for the `perElement` and `payloadAsArray`
+    * output shapes and by silver's element path ([[MrfElements]];
+    * reference: `JsonChunks.scala:69-83`). Pure, in-memory, O(n).
     */
   def splitTopLevelElements(bytes: Array[Byte], from: Int, until: Int): IndexedSeq[(Int, Int)] = {
     val out = IndexedSeq.newBuilder[(Int, Int)]
@@ -135,6 +136,10 @@ object JsonSplitter {
       }
       p
     } else {
+      // the first byte is always taken: a stray `]`/`}` becomes a
+      // one-byte (malformed) element instead of a zero-length one that
+      // [[splitTopLevelElements]] would re-scan forever
+      p += 1
       while (p < until && !isWs(bytes(p)) && bytes(p) != ','.toByte &&
         bytes(p) != ']'.toByte && bytes(p) != '}'.toByte) p += 1
       p

@@ -99,13 +99,10 @@ final class MrfPartitionReader(
       } else {
         val bytes = readRange()
         if (perElement) {
-          JsonSplitter.splitTopLevelElements(bytes, 0, bytes.length).iterator.map {
-            case (s, e) => row(key, fileName, UTF8String.fromBytes(bytes, s, e - s))
-          }
+          MrfElements.slices(bytes, 0, bytes.length).iterator.map(row(key, fileName, _))
         } else if (payloadAsArray) {
-          val els = JsonSplitter.splitTopLevelElements(bytes, 0, bytes.length)
-            .map { case (s, e) => UTF8String.fromBytes(bytes, s, e - s) }
-          Iterator.single(row(key, fileName, new GenericArrayData(els.toArray[Any])))
+          Iterator.single(row(key, fileName,
+            new GenericArrayData(MrfElements.slices(bytes, 0, bytes.length))))
         } else {
           // wrap the element run in brackets → valid JSON array text,
           // without a charset decode/encode round trip

@@ -195,20 +195,59 @@ class MrfPipelineSpec extends SparkTestBase {
     assert(gold.collect().map(_.getAs[Double]("negotiated_rate")).toSeq == Seq(123.45))
   }
 
-  test("pipeline works identically on perElement bronze") {
-    val p = MrfFixtures.writeTemp("ffs.json", MrfFixtures.ffs).getAbsolutePath
-    val perEl = spark.read.format("payer-mrf").option("perElement", "true").load(p)
-    val s = MrfPipeline.silver(perEl)
-    assert(s.codes.count() == 2 && s.prices.count() == 3)
-    val gold = MrfPipeline.shoppablePrices(s, "27447", "11-1111111")
-    assert(gold.collect().head.getAs[Double]("negotiated_rate") == 123.45)
+  /** The eight silver tables of `s` by name. */
+  private def silverTables(s: MrfPipeline.Silver): Seq[(String, DataFrame)] =
+    Seq("header" -> s.header, "providersXPayer" -> s.providersXPayer) ++ inNetworkFrames(s)
+
+  /** The source's three bronze shapes of one fixture file. */
+  private def shapes(name: String, json: String): Seq[(String, DataFrame)] = {
+    val p = MrfFixtures.writeTemp(name, json).getAbsolutePath
+    def read(opt: String) = spark.read.format("payer-mrf").option(opt, "true").load(p)
+    Seq("chunk text" -> spark.read.format("payer-mrf").load(p),
+      "perElement" -> read("perElement"), "payloadAsArray" -> read("payloadAsArray"))
   }
 
-  test("pipeline works identically on payloadAsArray bronze") {
-    val p = MrfFixtures.writeTemp("ffs.json", MrfFixtures.ffs).getAbsolutePath
-    val arr = spark.read.format("payer-mrf").option("payloadAsArray", "true").load(p)
-    val s = MrfPipeline.silver(arr)
-    assert(s.codes.count() == 2 && s.prices.count() == 3)
+  private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+
+  test("a malformed element drops alone, in every shape") {
+    import spark.implicits._
+    val got = shapes("malformed.json", MrfFixtures.malformedElement).map { case (shape, b) =>
+      val codes = MrfPipeline.inNetworkCodes(b)
+      // T1's one price has a string rate: its row stays, the rate is null
+      val t1RateIsNull = MrfPipeline.inNetworkRates(codes.filter($"billing_code" === "T1"))
+        .select($"rate.negotiated_prices".getItem(0)("negotiated_rate").isNull)
+        .as[Boolean].collect().toSeq
+      (shape, codes.select(coalesce($"billing_code", lit("<null>"))).as[String]
+        .collect().sorted.toSeq, t1RateIsNull)
+    }
+    assert(got.forall { case (_, codes, t1) =>
+      codes == Seq("27447", "99213", "T1") && t1 == Seq(true)
+    }, got)
+  }
+
+  test("every bronze shape gives row-identical silver") {
+    // code rows per fixture: the whitespace twins are two distinct
+    // byte sequences, so they keep two keys and two rows
+    val fixtures = Seq(
+      ("ffs.json", MrfFixtures.ffs, 2),
+      ("malformed.json", MrfFixtures.malformedElement, 3),
+      ("twins.json", MrfFixtures.whitespaceTwins, 3))
+    fixtures.foreach { case (name, json, nCodes) =>
+      val bySilver = shapes(name, json).map { case (shape, b) =>
+        val s = MrfPipeline.silver(b)
+        assert(s.codes.count() == nCodes, s"$name, $shape")
+        val gold = MrfPipeline.shoppablePrices(s, "27447", "11-1111111")
+        shape -> (silverTables(s).map { case (t, df) => t -> rows(df) } :+ ("gold" -> rows(gold)))
+      }
+      val (_, want) = bySilver.head
+      val gold = want.toMap.apply("gold")
+      assert(gold.size == 1 && gold.head.contains(",123.45,"), s"$name: $gold")
+      bySilver.tail.foreach { case (shape, got) =>
+        want.zip(got).foreach { case ((t, w), (_, g)) =>
+          assert(g == w, s"$name: $t differs between chunk text and $shape")
+        }
+      }
+    }
   }
 
   test("capitation arrangement: covered_services survive the parse") {

@@ -5,6 +5,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -257,17 +260,25 @@ class JsonSplitterSpec extends AnyFunSuite {
     assert(res.passed, res.status.toString)
   }
 
+  /** A chunk payload: random elements joined by random whitespace
+    * around the commas, and the padding around it in its buffer.
+    */
+  private val genElementRun: Gen[(List[String], String, String)] = {
+    val genWs = Gen.oneOf("", " ", "\n", " \n\t ")
+    for {
+      els <- Gen.chooseNum(0, 12).flatMap(n => Gen.listOfN(n, genValue(2)))
+      wsL <- genWs
+      wsR <- genWs
+      pad <- Gen.alphaNumStr
+    } yield (els, els.mkString(s"$wsL,$wsR"), pad)
+  }
+
   test("property: splitTopLevelElements recovers every element of a chunk payload") {
     // the executor-side re-split (payloadAsArray / perElement path) gets
     // the same adversarial coverage as the driver-side splitter: random
     // values, random inter-element whitespace, offset window into a
     // padded buffer
-    val genWs = Gen.oneOf("", " ", "\n", " \n\t ")
-    val prop = Prop.forAll(
-      Gen.chooseNum(0, 12).flatMap(n => Gen.listOfN(n, genValue(2))),
-      genWs, genWs,
-      Gen.alphaNumStr) { (els, wsL, wsR, pad) =>
-      val payload = els.mkString(s"$wsL,$wsR")
+    val prop = Prop.forAllNoShrink(genElementRun) { case (els, payload, pad) =>
       val bytes = (pad + payload + pad).getBytes("UTF-8")
       val from = pad.getBytes("UTF-8").length
       val until = from + payload.getBytes("UTF-8").length
@@ -278,6 +289,31 @@ class JsonSplitterSpec extends AnyFunSuite {
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), prop)
     assert(res.passed, res.status.toString)
+  }
+
+  test("property: MrfElements cuts chunk text into byte-equal zero-copy element slices") {
+    val prop = Prop.forAllNoShrink(genElementRun) { case (els, payload, pad) =>
+      // the chunk text "[…]" sits inside a padded buffer, as a row's
+      // string does inside its row buffer
+      val bytes = (pad + "[" + payload + "]" + pad).getBytes("UTF-8")
+      val text = "[" + payload + "]"
+      val chunk = UTF8String.fromBytes(bytes, pad.getBytes("UTF-8").length,
+        text.getBytes("UTF-8").length)
+      val got = MrfElements.elements(chunk).toArray[UTF8String](StringType)
+      got.map(_.toString).toList == els && got.forall(_.getBaseObject eq bytes)
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("MrfElements: other text is one element as it is, null is null") {
+    val obj = UTF8String.fromString("""{"a": [1, 2], "b": "]"}""")
+    val one = MrfElements.elements(obj)
+    assert(one.numElements() == 1 && (one.getUTF8String(0) eq obj))
+    assert(MrfElements(Literal.create(null, StringType)).eval() == null)
+    // a stray closing bracket is one malformed element, not a hang
+    assert(MrfElements.elements(UTF8String.fromString("[1,],2]"))
+      .toArray[UTF8String](StringType).map(_.toString).toSeq == Seq("1", "]", "2"))
   }
 
   test("property: round-trip holds for random docs × buffer × chunk sizes") {

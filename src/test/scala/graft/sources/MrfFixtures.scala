@@ -92,6 +92,33 @@ object MrfFixtures {
       |  ]
       |}""".stripMargin
 
+  /** The start of [[ffs]]'s second in_network item (99213). */
+  private val officeVisit = """{"negotiation_arrangement": "ffs", "name": "OFFICE VISIT""""
+
+  /** [[ffs]] with three more in_network elements between its two items:
+    * one that does not parse (a member without its colon), an empty
+    * object, and a third code, T1, whose one price has a string rate.
+    * The first two carry no field and drop alone; T1 keeps its row, its
+    * mistyped price parsing to nulls.
+    */
+  val malformedElement: String = ffs.replace(officeVisit,
+    """{"negotiation_arrangement" "ffs", "billing_code": "00000"},
+      |    {},
+      |    {"negotiation_arrangement": "ffs", "name": "MISTYPED", "billing_code_type": "CPT", "billing_code_type_version": "2026", "billing_code": "T1", "negotiated_rates": [
+      |      {"provider_references": [100], "negotiated_prices": [{"negotiated_type": "negotiated", "negotiated_rate": "abc"}]}]},
+      |    """.stripMargin + officeVisit)
+
+  /** [[ffs]] with its 99213 item listed twice, the copy differing only
+    * in the whitespace after one colon.
+    */
+  val whitespaceTwins: String = {
+    val start = ffs.indexOf(officeVisit)
+    val end = ffs.lastIndexOf("]}") + 2
+    val item = ffs.substring(start, end)
+    ffs.substring(0, end) + ",\n    " + item.replaceFirst(": \"ffs\"", ":  \"ffs\"") +
+      ffs.substring(end)
+  }
+
   def writeTemp(name: String, content: String, gz: Boolean = false): File = {
     val dir = Files.createTempDirectory("mrf-fixture").toFile
     val f = new File(dir, name)
