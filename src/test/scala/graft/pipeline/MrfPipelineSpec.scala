@@ -225,7 +225,9 @@ class MrfPipelineSpec extends SparkTestBase {
     }, got)
   }
 
-  test("every bronze shape gives row-identical silver") {
+  /** Asserts that all eight silver tables and the gold lookup built from
+    * the `shape` bronze are row-identical to those built from chunk text. */
+  private def assertSameSilverAsChunkText(shape: String): Unit = {
     // code rows per fixture: the whitespace twins are two distinct
     // byte sequences, so they keep two keys and two rows
     val fixtures = Seq(
@@ -233,21 +235,29 @@ class MrfPipelineSpec extends SparkTestBase {
       ("malformed.json", MrfFixtures.malformedElement, 3),
       ("twins.json", MrfFixtures.whitespaceTwins, 3))
     fixtures.foreach { case (name, json, nCodes) =>
-      val bySilver = shapes(name, json).map { case (shape, b) =>
-        val s = MrfPipeline.silver(b)
-        assert(s.codes.count() == nCodes, s"$name, $shape")
-        val gold = MrfPipeline.shoppablePrices(s, "27447", "11-1111111")
-        shape -> (silverTables(s).map { case (t, df) => t -> rows(df) } :+ ("gold" -> rows(gold)))
-      }
-      val (_, want) = bySilver.head
+      val bySilver = shapes(name, json).filter { case (sh, _) => sh == "chunk text" || sh == shape }
+        .map { case (sh, b) =>
+          val s = MrfPipeline.silver(b)
+          assert(s.codes.count() == nCodes, s"$name, $sh")
+          val gold = MrfPipeline.shoppablePrices(s, "27447", "11-1111111")
+          sh -> (silverTables(s).map { case (t, df) => t -> rows(df) } :+ ("gold" -> rows(gold)))
+        }
+      assert(bySilver.map(_._1) == Seq("chunk text", shape))
+      val Seq((_, want), (_, got)) = bySilver
       val gold = want.toMap.apply("gold")
       assert(gold.size == 1 && gold.head.contains(",123.45,"), s"$name: $gold")
-      bySilver.tail.foreach { case (shape, got) =>
-        want.zip(got).foreach { case ((t, w), (_, g)) =>
-          assert(g == w, s"$name: $t differs between chunk text and $shape")
-        }
+      want.zip(got).foreach { case ((t, w), (_, g)) =>
+        assert(g == w, s"$name: $t differs between chunk text and $shape")
       }
     }
+  }
+
+  test("pipeline works identically on perElement bronze") {
+    assertSameSilverAsChunkText("perElement")
+  }
+
+  test("pipeline works identically on payloadAsArray bronze") {
+    assertSameSilverAsChunkText("payloadAsArray")
   }
 
   test("capitation arrangement: covered_services survive the parse") {
