@@ -9,10 +9,16 @@ import java.io.InputStream
   *
   * This is the engine's only genuinely custom computation — everything
   * downstream is declarative Spark. It replaces the reference's
-  * bidirectional byte scans (`/root/reference/src/main/scala/com/
-  * databricks/ByteParser.scala:13-259`) and recursive driver parse
-  * (`JsonMRFSource.scala:74-134`) with ONE forward-only, resumable
-  * state machine. By design it fixes three reference defects:
+  * bidirectional byte scans (`ByteParser.scala:13-259`) and recursive
+  * driver parse (`JsonMRFSource.scala:74-134`) with ONE forward-only,
+  * resumable lexer, [[JsonSplitter.ValueScan]], which skips one JSON
+  * value at a time. Both sides of the split run on it: this streaming
+  * splitter feeds it one read buffer at a time and is STRICT (EOF or a
+  * delimiter where a value should start fails the file, see
+  * `scanValue`), and the executor-side re-split
+  * [[JsonSplitter.splitTopLevelElements]] feeds it one element run and
+  * is LENIENT (an unterminated value ends at the end of the run). By
+  * design it fixes three reference defects:
   *   - the unimplemented "array key not in buffer" hole
   *     (`JsonMRFSource.scala:114` `???`) — keys are captured on the way
   *     in, never re-discovered by scanning backwards;
@@ -76,74 +82,118 @@ object JsonSplitter {
   private def isWs(b: Byte): Boolean =
     b == ' ' || b == '\n' || b == '\t' || b == '\r'
 
+  private def isDelim(b: Byte): Boolean =
+    isWs(b) || b == ','.toByte || b == ']'.toByte || b == '}'.toByte
+
+  /** The one JSON lexer: a resumable skip over ONE value — a string, a
+    * `{…}`/`[…]` container or a bare scalar — fed any number of byte
+    * ranges in order. Depth, in-string and escape state carry across
+    * ranges, so the streaming splitter feeds it one read buffer at a
+    * time and [[splitTopLevelElements]] one whole element run.
+    *
+    * A container's first byte sets depth 1 and the value ends when depth
+    * returns to 0; a string is a depth-0 value that ends at its closing
+    * quote; a scalar always takes its first byte and ends before the
+    * next whitespace, `,`, `]` or `}`. The lexer has no policy of its own
+    * for input that is not JSON: the callers decide what EOF or a
+    * delimiter where a value should start means.
+    */
+  private[sources] final class ValueScan {
+    private var started = false
+    private var scalar = false
+    private var depth = 0
+    private var inString = false
+    private var escape = false
+
+    /** The value ended inside the last range [[scan]] was given. */
+    var done = false
+
+    def reset(): Unit = {
+      started = false; scalar = false; depth = 0
+      inString = false; escape = false; done = false
+    }
+
+    /** Scans `bytes[from, until)`; returns the offset just past the value
+      * when it ends in the range (`done`, the offset of the delimiter for
+      * a scalar), else `until`.
+      */
+    def scan(bytes: Array[Byte], from: Int, until: Int): Int = {
+      var p = from
+      if (!started && p < until) {
+        started = true
+        val b = bytes(p)
+        if (b == Quote) inString = true
+        else if (b == '{'.toByte || b == '['.toByte) depth = 1
+        else scalar = true
+        p += 1
+      }
+      if (scalar) scalarEnd(bytes, p, until) else nestedEnd(bytes, p, until)
+    }
+
+    private def scalarEnd(bytes: Array[Byte], from: Int, until: Int): Int = {
+      var p = from
+      while (p < until && !isDelim(bytes(p))) p += 1
+      done = p < until
+      p
+    }
+
+    /** The hot loop for multi-GB `in_network` elements: the state lives
+      * in locals while it runs and is stored back only when the range
+      * ends first.
+      */
+    private def nestedEnd(bytes: Array[Byte], from: Int, until: Int): Int = {
+      var p = from
+      var d = depth
+      var s = inString
+      var e = escape
+      while (p < until) {
+        val b = bytes(p)
+        p += 1
+        if (s) {
+          if (e) e = false
+          else if (b == Backslash) e = true
+          else if (b == Quote) {
+            s = false
+            if (d == 0) { done = true; return p }
+          }
+        } else if (b == Quote) s = true
+        else if (b == '{'.toByte || b == '['.toByte) d += 1
+        else if (b == '}'.toByte || b == ']'.toByte) {
+          d -= 1
+          if (d == 0) { done = true; return p }
+        }
+      }
+      depth = d; inString = s; escape = e
+      p
+    }
+  }
+
   /** Splits a chunk's payload bytes (no enclosing brackets) back into
-    * per-element `[start, end)` offsets. Executor-side counterpart of the
-    * driver's chunking — used for the `perElement` and `payloadAsArray`
-    * output shapes and by silver's element path ([[MrfElements]];
-    * reference: `JsonChunks.scala:69-83`). Pure, in-memory, O(n).
+    * per-element `[start, end)` offsets with [[ValueScan]], once per
+    * element. Executor-side counterpart of the driver's chunking — used
+    * for the `perElement` and `payloadAsArray` output shapes and by
+    * silver's element path ([[MrfElements]]; reference:
+    * `JsonChunks.scala:69-83`). Pure, in-memory, O(n).
+    *
+    * Lenient by design, since [[MrfElements]] reads any bronze string:
+    * a value left open at `until` ends there, and a stray `]`/`}` is a
+    * one-byte (malformed) element that the silver parse drops. Ranges are
+    * never empty, never overlap and never leave `[from, until)`.
     */
   def splitTopLevelElements(bytes: Array[Byte], from: Int, until: Int): IndexedSeq[(Int, Int)] = {
     val out = IndexedSeq.newBuilder[(Int, Int)]
+    val lexer = new ValueScan
     var p = from
     while (p < until) {
       while (p < until && (isWs(bytes(p)) || bytes(p) == ','.toByte)) p += 1
       if (p < until) {
         val start = p
-        p = scanValueInArray(bytes, p, until)
+        lexer.reset()
+        p = lexer.scan(bytes, p, until)
         out += ((start, p))
       }
     }
     out.result()
-  }
-
-  /** Scan one JSON value in `bytes` starting at `p` (non-ws); returns the
-    * exclusive end offset. Scalars stop before `,`/`]`/`}`/whitespace.
-    */
-  private def scanValueInArray(bytes: Array[Byte], p0: Int, until: Int): Int = {
-    var p = p0
-    val b0 = bytes(p)
-    if (b0 == Quote) {
-      p += 1
-      var escape = false
-      while (p < until && (escape || bytes(p) != Quote)) {
-        escape = !escape && bytes(p) == Backslash
-        p += 1
-      }
-      // clamp: an UNTERMINATED string (truncated/rewritten input) exits
-      // the loop at p == until; returning until + 1 would hand callers
-      // an element range past the buffer, and UTF8String.fromBytes does
-      // no bounds check (it would read adjacent heap memory into a row)
-      math.min(p + 1, until)
-    } else if (b0 == '{'.toByte || b0 == '['.toByte) {
-      var depth = 0
-      var inString = false
-      var escape = false
-      while (p < until) {
-        val b = bytes(p)
-        if (inString) {
-          if (escape) escape = false
-          else if (b == Backslash) escape = true
-          else if (b == Quote) inString = false
-        } else {
-          if (b == Quote) inString = true
-          else if (b == '{'.toByte || b == '['.toByte) depth += 1
-          else if (b == '}'.toByte || b == ']'.toByte) {
-            depth -= 1
-            if (depth == 0) return p + 1
-          }
-        }
-        p += 1
-      }
-      p
-    } else {
-      // the first byte is always taken: a stray `]`/`}` becomes a
-      // one-byte (malformed) element instead of a zero-length one that
-      // [[splitTopLevelElements]] would re-scan forever
-      p += 1
-      while (p < until && !isWs(bytes(p)) && bytes(p) != ','.toByte &&
-        bytes(p) != ']'.toByte && bytes(p) != '}'.toByte) p += 1
-      p
-    }
   }
 
   /** Minimal JSON string unescape for header keys (reference never
@@ -224,115 +274,40 @@ final class JsonSplitter(
   private def fail(msg: String): Nothing =
     throw new IllegalArgumentException(s"malformed JSON at byte $abs: $msg")
 
-  private def expect(c: Char): Unit = {
+  /** Fails unless the next byte is `c`; consumes nothing. */
+  private def check(c: Char): Unit = {
     val b = peek()
     if (b != c.toInt) fail(s"expected '$c', got ${if (b < 0) "EOF" else s"'${b.toChar}'"}")
-    advance()
   }
 
-  /** Scan a JSON string INCLUDING quotes from the current position
-    * (which must be the opening quote); optionally collect raw bytes.
+  private def expect(c: Char): Unit = { check(c); advance() }
+
+  private val lexer = new ValueScan
+
+  /** Scan any JSON value starting at the current (non-ws) position;
+    * optionally collect its raw bytes. The strict policy lives here, not
+    * in [[ValueScan]]: a delimiter where a value should start fails, and
+    * so does EOF before the value ends. EOF never ends a scalar either —
+    * a valid document closes with the top-level '}', so every scalar is
+    * followed by a delimiter BYTE; ending one at EOF would let a
+    * truncated file "complete" its final element and emit a chunk the
+    * full file never produces, breaking the truncation-prefix invariant
+    * ignoreCorruptFiles depends on.
     */
-  private def scanString(collect: java.io.ByteArrayOutputStream): Unit = {
-    expect('"')
-    if (collect != null) collect.write(Quote)
-    var escape = false
-    var closed = false
-    while (!closed) {
-      if (!refill()) fail("EOF inside string")
-      // tight inner loop over the available buffer
-      var p = bufPos
-      val len = bufLen
-      while (p < len && !closed) {
-        val b = buf(p)
-        if (escape) escape = false
-        else if (b == Backslash) escape = true
-        else if (b == Quote) closed = true
-        p += 1
-      }
-      if (collect != null) collect.write(buf, bufPos, p - bufPos)
-      bufPos = p
-    }
-  }
-
-  /** Scan a `{...}`/`[...]` container from its opening bracket through
-    * its matching close — the hot loop for multi-GB `in_network`
-    * elements. Quote/escape aware, depth-tracked, no allocation.
-    */
-  private def scanContainer(collect: java.io.ByteArrayOutputStream): Unit = {
-    var depth = 0
-    var inString = false
-    var escape = false
-    var done = false
-    while (!done) {
-      if (!refill()) fail("EOF inside value")
-      var p = bufPos
-      val len = bufLen
-      while (p < len && !done) {
-        val b = buf(p)
-        if (inString) {
-          if (escape) escape = false
-          else if (b == Backslash) escape = true
-          else if (b == Quote) inString = false
-        } else {
-          if (b == Quote) inString = true
-          else if (b == '{'.toByte || b == '['.toByte) depth += 1
-          else if (b == '}'.toByte || b == ']'.toByte) {
-            depth -= 1
-            if (depth == 0) done = true
-            else if (depth < 0) fail("unbalanced bracket")
-          }
-        }
-        p += 1
-      }
-      if (collect != null) collect.write(buf, bufPos, p - bufPos)
-      bufPos = p
-    }
-  }
-
-  /** Scan a bare scalar token (number/true/false/null); stops before the
-    * delimiter.
-    */
-  private def scanScalar(collect: java.io.ByteArrayOutputStream): Unit = {
-    var done = false
-    var any = false
-    while (!done) {
-      if (!refill()) {
-        // EOF can never legitimately end a scalar in this grammar — a
-        // valid document always closes with the top-level '}', so every
-        // scalar is followed by a delimiter BYTE. Treating EOF as that
-        // delimiter would let a truncated file "complete" its final
-        // element, and scanTopLevelArray could then emit a chunk whose
-        // end offset the full file never produces — breaking the
-        // truncation-prefix invariant ignoreCorruptFiles depends on
-        // (found by the ScalaCheck truncation property: cut mid-`null`,
-        // the divergent chunk was emitted before the EOF failure).
-        fail("EOF inside scalar value")
-      }
-      else {
-        var p = bufPos
-        val len = bufLen
-        while (p < len && !done) {
-          val b = buf(p)
-          if (isWs(b) || b == ','.toByte || b == ']'.toByte || b == '}'.toByte) done = true
-          else p += 1
-        }
-        if (collect != null) collect.write(buf, bufPos, p - bufPos)
-        if (p > bufPos) any = true
-        bufPos = p
-      }
-    }
-    if (!any) fail("expected a JSON value")
-  }
-
-  /** Scan any JSON value starting at the current (non-ws) position. */
-  private def scanValue(collect: java.io.ByteArrayOutputStream): Unit =
+  private def scanValue(collect: java.io.ByteArrayOutputStream): Unit = {
     peek() match {
       case -1 => fail("EOF, expected a value")
-      case '"' => scanString(collect)
-      case '{' | '[' => scanContainer(collect)
-      case _ => scanScalar(collect)
+      case ',' | ']' | '}' => fail("expected a JSON value")
+      case _ =>
     }
+    lexer.reset()
+    while (!lexer.done) {
+      if (!refill()) fail("EOF inside value")
+      val p = lexer.scan(buf, bufPos, bufLen)
+      if (collect != null) collect.write(buf, bufPos, p - bufPos)
+      bufPos = p
+    }
+  }
 
   /** Consume the elements of a top-level array (opening `[` already
     * consumed), emitting [[JsonSplitter.ArrayChunk]]s cut at
@@ -371,9 +346,6 @@ final class JsonSplitter(
     }
   }
 
-  /** Stream the whole document, invoking `onChunk` for every emitted
-    * chunk in document order. Single pass; throws on malformed input.
-    */
   /** Buffer that fails the parse AS the cap is crossed: checking only
     * after a member is fully buffered would defeat the guard for the
     * very input it exists for — ONE multi-GB member OOMs the driver
@@ -389,6 +361,9 @@ final class JsonSplitter(
     }
   }
 
+  /** Stream the whole document, invoking `onChunk` for every emitted
+    * chunk in document order. Single pass; throws on malformed input.
+    */
   def run(onChunk: Chunk => Unit): Unit = {
     val residue = new CappedBuffer(opts.maxResidueBytes, "non-array header members")
     var members = 0
@@ -406,7 +381,8 @@ final class JsonSplitter(
     while (!done) {
       skipWs()
       val keyRaw = new CappedBuffer(opts.maxResidueBytes, "object key")
-      scanString(keyRaw)
+      check('"')
+      scanValue(keyRaw)
       skipWs()
       expect(':')
       skipWs()

@@ -75,6 +75,20 @@ class JsonSplitterSpec extends AnyFunSuite {
       if (orig.size() == 0) assert(!rebuilt.contains(k))
       else assert(rebuilt(k) == orig, s"array $k differs")
     }
+    // 4. byte-exact parity of the two sides of the split: re-splitting
+    // the chunk ranges gives exactly the ranges the streaming splitter
+    // cuts one element at a time
+    def ranges(cs: Seq[JsonSplitter.Chunk]): Map[String, Seq[(Long, Long)]] =
+      cs.collect { case c: JsonSplitter.ArrayChunk => c }.groupBy(_.headerKey)
+        .map { case (k, v) => k -> v.map(c => (c.start, c.end)) }
+    val perElement = ranges(split(doc, opts.copy(maxElementsPerChunk = 1)))
+    val resplit = ranges(chunks).map { case (k, rs) =>
+      k -> rs.flatMap { case (s, e) =>
+        JsonSplitter.splitTopLevelElements(bytes, s.toInt, e.toInt)
+          .map { case (s0, e0) => (s0.toLong, e0.toLong) }
+      }
+    }
+    assert(resplit == perElement)
   }
 
   private val cmsDoc =
@@ -164,6 +178,15 @@ class JsonSplitterSpec extends AnyFunSuite {
     assert(e.getMessage.contains("malformed JSON"))
     intercept[IllegalArgumentException](split("""[1,2]""", JsonSplitter.Options()))
     intercept[IllegalArgumentException](split("""{"a" 1}""", JsonSplitter.Options()))
+    // a delimiter where a value should start, an unquoted key, and EOF
+    // inside a string or a scalar. The last two fail only through the
+    // splitter's own checks: the lexer alone takes a stray `]` or a bare
+    // key as a scalar
+    for (doc <- Seq("""{"a":[1,]}""", """{"a":[}""", """{a:1}""", """{"a":"x""", """{"a":tru""",
+           """{"a":[1,]]}""", """{a :1}""")) {
+      val e = intercept[IllegalArgumentException](split(doc, JsonSplitter.Options()))
+      assert(e.getMessage.contains("malformed JSON"), s"$doc: ${e.getMessage}")
+    }
   }
 
   // ---------- property-based invariant ----------
@@ -288,6 +311,29 @@ class JsonSplitterSpec extends AnyFunSuite {
         got.zip(els).forall { case (g, e) => mapper.readTree(g) == mapper.readTree(e) }
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("property: splitTopLevelElements cuts arbitrary bytes into well-formed ranges") {
+    // MrfElements reads any bronze string, so the lenient re-split must
+    // stay total on text that is not JSON: every range non-empty, in
+    // order, inside the window, with only whitespace and commas between
+    val genGarbage: Gen[String] = Gen.listOf(Gen.frequency(
+      6 -> Gen.oneOf("{}[]\",:\\".toSeq),
+      2 -> Gen.alphaChar,
+      1 -> Gen.oneOf(" \n\t\r".toSeq))).map(_.mkString)
+    val prop = Prop.forAllNoShrink(genGarbage, Gen.alphaNumStr) { (text, pad) =>
+      val bytes = (pad + text + pad).getBytes(UTF_8)
+      val from = pad.length
+      val until = from + text.length
+      val got = JsonSplitter.splitTopLevelElements(bytes, from, until)
+      val gaps = (from +: got.map(_._2)).zip(got.map(_._1) :+ until)
+      got.forall { case (s, e) => s < e } &&
+        gaps.forall { case (a, b) =>
+          a <= b && (a until b).forall(i => " \n\t\r,".contains(bytes(i).toChar))
+        }
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(500), prop)
     assert(res.passed, res.status.toString)
   }
 

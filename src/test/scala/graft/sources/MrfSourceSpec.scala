@@ -336,6 +336,11 @@ class MrfSourceSpec extends SparkTestBase {
     assert(plan.contains("columns=header_key"), plan)
     val m = counts.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(m == Map("provider_references" -> 3L, "in_network" -> 2L, "" -> 1L))
+    // the pruned count (the driver's element count) equals the rows the
+    // executor's re-split emits when the payload is read
+    val forced = df.select("header_key", "json_payload").collect()
+      .groupBy(_.getString(0)).map { case (k, rs) => k -> rs.length.toLong }
+    assert(forced == m)
   }
 
   test("filter pushdown: header_key demux prunes chunks at planning time") {
